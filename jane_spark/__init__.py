@@ -6,7 +6,8 @@ Spark (DataFrame / SQL / Catalyst / Structured Streaming) over Parquet,
 designed for 100 TB scale, tested locally against a DuckDB oracle.
 
 Layout:
-  engine/     SparkSession factory (pinned confs) + table catalog
+  engine/     SparkSession factory (pinned confs) + table catalog +
+              pydaemon (the Python worker daemon the factory pins)
   plans/      query-compilation layer (param dict -> Column predicates,
               interval-overlap join rewrite, as-of resolution)
   operators/  relational / analytical operators built on DataFrame ops

@@ -601,6 +601,8 @@ def bloom_bitmap(
     the probe side's plan as a literal); that aggregate isn't in the
     public FunctionRegistry, so the build here is plain DataFrame ops.
     """
+    if n_hashes < 1:
+        raise ValueError("n_hashes must be >= 1")
     nb = 1 << n_bits_log2
     pos_cols = [
         F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(nb))

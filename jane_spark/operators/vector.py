@@ -420,7 +420,10 @@ def _assign_lists(
     norms = np.sqrt((centroids * centroids).sum(axis=1))
     norms[norms == 0.0] = 1.0
     bc = spark.sparkContext.broadcast((centroids, norms))
-    out_schema = f"{id_col} long, {vec_col} array<float>, list_id int"
+    # the vector passes through with its input type: pinning array<float>
+    # would cut array<double> vectors to float32 before the residuals
+    vec_type = vectors.schema[vec_col].dataType.simpleString()
+    out_schema = f"{id_col} long, {vec_col} {vec_type}, list_id int"
     if with_rank:
         out_schema += ", probe_rank int"
 

@@ -50,16 +50,6 @@ AUDIO_ENCODERS: dict = {}
 FRAME_DECODERS: dict = {}  # media_type -> bytes -> (n, h, w, 3) frames
 
 
-def decode_image(data: bytes, media_type: str) -> "np.ndarray":
-    if media_type not in CODECS:
-        raise NotImplementedError(
-            f"no codec registered for {media_type!r} — image/audio libraries "
-            "are unavailable in this environment; register one in "
-            "jane_spark.sources.multimodal.CODECS"
-        )
-    return CODECS[media_type](data)
-
-
 def fake_feature_extract(df: DataFrame, payload_col: str, dim: int = 8) -> DataFrame:
     """Deterministic stand-in for decode→embed: hashes payload bytes into
     a fixed-dim float vector. Arrow-batched mapInPandas — the exact

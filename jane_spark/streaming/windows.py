@@ -50,27 +50,6 @@ def tumbling_stats(
     )
 
 
-def sliding_stats(
-    df: DataFrame,
-    ts: str,
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str | None = None,
-    value: str = "value",
-) -> DataFrame:
-    """I3: overlapping-window rates (window = 2 × slide in the contract)."""
-    df = _with_event_time(df, ts, watermark)
-    return (
-        df.groupBy(F.window(ts, width, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum(value), 3).alias("sum_value"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def session_spans(
     df: DataFrame,
     key: str,

@@ -40,16 +40,17 @@ def duck(sf_dir):
 
 
 # ---------------------------------------------------------------------
-# Test tiering (VERDICT r15 #1; see pytest.ini). Node-id fragments of
-# the multi-minute Spark-fixture tests, selected from a full
-# `--durations=0` run (2026-08-18, idle box, 829 passed / 1960 s):
-# everything here is >=5 s and its operator FAMILY keeps at least one
-# default-path test — usually the driver-facing oracle-parity row
+# Test tiering (VERDICT r15 #1; see pytest.ini). Names (test function,
+# or function[param id]) of the multi-minute Spark-fixture tests,
+# selected from a full `--durations=0` run (2026-08-18, idle box,
+# 829 passed / 1960 s): everything here is >=5 s and its operator
+# FAMILY keeps at least one default-path test — usually the
+# driver-facing oracle-parity row
 # (kept OUT of this list even when it is itself 6-13 s: q_k21 logreg,
 # q_k48 nn_descent, q_i11 stream join, q_k26 unigram_train,
 # q_i7 upsert, q_k16 dbscan, q_k27 pagerank, q_i5 late clones).
 # The full suite (including these) runs with `-m ""`.
-SLOW_NODE_FRAGMENTS = (
+SLOW_TEST_NAMES = (
     "test_label_propagation_incr_laws",
     "test_no_python_eval_outside_allowlist",
     "test_oracle_parity[q_k52_lpa_incr]",
@@ -141,6 +142,9 @@ SLOW_NODE_FRAGMENTS = (
 
 
 def pytest_collection_modifyitems(config, items):
+    # exact names, not substrings of the node id: a new test whose name
+    # extends a listed one must not be deselected with it
+    slow = set(SLOW_TEST_NAMES)
     for item in items:
-        if any(f in item.nodeid for f in SLOW_NODE_FRAGMENTS):
+        if item.name in slow or item.originalname in slow:
             item.add_marker(pytest.mark.slow)

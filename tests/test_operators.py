@@ -545,6 +545,27 @@ def test_ivf_recall_reasonable(spark, sf_dir):
     assert full == exact, "n_probe=n_lists must equal exact search"
 
 
+def test_ivf_assign_keeps_double_vectors(spark):
+    """The IVF list assignment passes each vector through with its input
+    type: array<double> vectors reach the residual subtraction exact,
+    not cut to float32, and array<float> stays array<float>."""
+    import numpy as np
+
+    from jane_spark.operators.vector import _assign_lists
+
+    vecs = [(i, [0.1 * (i + 1), 1 / 3, -2.0 / (i + 7)]) for i in range(6)]
+    cents = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    dbl = spark.createDataFrame(vecs, "id long, v array<double>")
+    out = _assign_lists(dbl, "id", "v", cents, n_probe=2, with_rank=True)
+    assert out.schema["v"].dataType.simpleString() == "array<double>"
+    got = {(r["id"], r["probe_rank"]): list(r["v"]) for r in out.collect()}
+    assert got == {(i, rank): v for i, v in vecs for rank in range(2)}
+
+    flt = spark.createDataFrame(vecs, "id long, v array<float>")
+    out = _assign_lists(flt, "id", "v", cents, n_probe=1)
+    assert out.schema["v"].dataType.simpleString() == "array<float>"
+
+
 def test_embedding_near_pairs_lsh_parity(spark, sf_dir):
     """At near-dup thresholds the LSH prefilter must find the same
     pairs as the exact path (few planes => near-identical vectors land
@@ -2573,6 +2594,23 @@ def test_bloom_prefilter_anti_join_exact_and_selective(spark, sf_dir):
         bin(w & ((1 << 64) - 1)).count("1") for w in bm_sat
     ) / (64 * len(bm_sat))
     assert sat_fill == 1.0
+
+
+@pytest.mark.parametrize("n_hashes", [0, -1])
+def test_bloom_rejects_fewer_than_one_hash(spark, n_hashes):
+    """With no hash probes the membership test is an empty forall, true
+    for every key, so the prefilter would clear nothing. Both entry
+    points refuse the sizing."""
+    from jane_spark.operators.dedup import (
+        bloom_bitmap,
+        bloom_prefilter_anti_join,
+    )
+
+    keys = spark.createDataFrame([("a",), ("b",)], "fp string")
+    with pytest.raises(ValueError, match="n_hashes must be >= 1"):
+        bloom_bitmap(keys, "fp", n_hashes=n_hashes)
+    with pytest.raises(ValueError, match="n_hashes must be >= 1"):
+        bloom_prefilter_anti_join(keys, keys, "fp", n_hashes=n_hashes)
 
 
 # ------------------------------------------- portable cardinality sketches
