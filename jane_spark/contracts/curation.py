@@ -2902,7 +2902,10 @@ def q_k26_train(spark, sf_dir):
     doc="full BPE training loop (operators/bpe.train_bpe): 8 merges, "
     "each iteration = one vocabulary-sized pair-count shuffle + ONE "
     "row collected (the argmax pair, IVF-centroid precedent), "
-    "lineage cut per iteration; (count desc, pair asc) ties make the "
+    "lineage cut per iteration; a word-type table that fits one task "
+    "(engine.onetask: Spark's per-row size estimate within the "
+    "broadcast threshold) runs all 8 merges in ONE Arrow task "
+    "instead; (count desc, pair asc) ties make the "
     "merge table byte-deterministic across partitionings. Oracle-"
     "backed since r7: the greedy merge fold has a CLOSED FORM "
     "(a!=b merges every match; a==b picks alternate positions per "

@@ -1780,7 +1780,10 @@ SELECT node, CAST(r AS BIGINT) AS rank_scaled FROM r{iters}"""
     "reproduces the ranks bit-for-bit, dangling mass redistributed "
     "each round. Per iteration: one src-join (rank table broadcast at "
     "dimension-sized node sets) + one dst-groupBy; the edge table is "
-    "checkpointed once and reused",
+    "checkpointed once and reused. When that edge table fits one task "
+    "(engine.onetask: Spark's per-row size estimate within the "
+    "broadcast threshold) all 5 rounds run in ONE Arrow task with the "
+    "same bigint arithmetic, and the ranks are checkpointed",
 )
 def q_k27_pagerank(spark, sf_dir):
     from jane_spark.operators.pagerank import event_transition_edges, pagerank

@@ -18,6 +18,15 @@ no UDFs anywhere in the loop. Lineage is cut with localCheckpoint per
 iteration (components.py precedent) so n_merges doesn't build an
 n_merges-deep plan.
 
+That loop costs two or three driver-scheduled jobs per merge however
+small the vocabulary is. When the checkpointed word-type table fits
+one task (``engine.onetask.one_task_rows``: at most ``MAX_ROWS``
+rows, a bound set from measured timings of both paths), one
+``coalesce(1).mapInArrow`` task runs every merge instead: the symbols
+still come from the JVM (``_initial_symbols``), the task only counts
+pairs, takes the same argmax and merges. Larger tables keep the
+distributed loop; both paths return the same list.
+
 Greedy left-to-right merge semantics match the reference algorithm
 (non-overlapping scan: 'aaa' + (a,a) → ['aa','a']), pinned against a
 pure-Python twin in tests.
@@ -47,10 +56,10 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def _initial_symbols(word: Column) -> Column:
     """Characters with END_OF_WORD glued to the last one:
     'low' → ['l', 'o', 'w</w>']."""
-    # Spark's split keeps the trailing empty string a zero-width match
-    # at end-of-input produces (unlike Java's default trim) — drop it,
-    # or the marker would glue onto '' instead of the last character
-    chars = F.filter(F.split(word, "(?!^)"), lambda c: c != "")
+    # one element per code point ('.' in Java regex consumes a whole
+    # surrogate pair; a zero-width split would cut between its halves
+    # and turn every non-BMP character into two '?'), newlines included
+    chars = F.regexp_extract_all(word, F.lit("(?s)."), 0)
     n = F.size(chars)
     return F.concat(
         F.slice(chars, 1, n - 1),
@@ -120,8 +129,15 @@ def train_bpe(
     ``checkpoint_every`` balances lineage depth against checkpoint
     jobs: between cuts each argmax re-runs up to that many row-local
     merge folds over the vocabulary table — cheaper than materializing
-    it every iteration (measured ~2× on the bench corpus)."""
+    it every iteration (measured ~2× on the bench corpus).
+
+    A vocabulary table that fits one task
+    (``engine.onetask.one_task_rows``) skips the loop: one
+    ``coalesce(1).mapInArrow`` task runs every merge
+    (:func:`_merge_loop`) over the symbols built above and returns the
+    same list."""
     from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
+    from jane_spark.engine.onetask import one_task_rows
 
     spark = docs.sparkSession
     vocab = word_counts(docs, text_col).select(
@@ -130,6 +146,10 @@ def train_bpe(
     pre = persistent_rdd_ids(spark)
     vocab = vocab.localCheckpoint(eager=True)
     gen_ids = persistent_rdd_ids(spark) - pre
+    if one_task_rows(vocab) is not None:
+        merges = _merges_in_one_task(vocab, n_merges)
+        unpersist_ids(spark, gen_ids)
+        return merges
     merges: list[tuple[str, str, int]] = []
     since_checkpoint = 0
     for _ in range(n_merges):
@@ -157,6 +177,74 @@ def train_bpe(
     # the result is a plain driver list — every checkpoint is dead
     unpersist_ids(spark, gen_ids)
     return merges
+
+
+def _merges_in_one_task(
+    vocab: DataFrame, n_merges: int
+) -> list[tuple[str, str, int]]:
+    """:func:`_merge_loop` over the whole ``(syms, n)`` table in one
+    Python task."""
+    import pyarrow as pa
+
+    def run(batches):
+        words: list = []
+        for b in batches:
+            syms, n = b.column("syms").to_pylist(), b.column("n").to_pylist()
+            words += zip(syms, n)
+        merges = _merge_loop(words, n_merges)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([m[i] for m in merges]) for i in range(3)],
+            schema=pa.schema(
+                [
+                    ("left", pa.string()),
+                    ("right", pa.string()),
+                    ("cnt", pa.int64()),
+                ]
+            ),
+        )
+
+    rows = (
+        vocab.coalesce(1)
+        .mapInArrow(run, "left string, right string, cnt long")
+        .collect()
+    )
+    return [(r["left"], r["right"], int(r["cnt"])) for r in rows]
+
+
+def _merge_loop(
+    words: list[tuple[list[str], int]], n_merges: int
+) -> list[tuple[str, str, int]]:
+    """The training loop on driver-side data: ``words`` holds each word
+    type's symbols and count. Per step: weighted adjacent-pair counts,
+    the argmax by (count desc, left asc, right asc) — Python's ``str``
+    order is code-point order, which is Spark's UTF-8 byte order — a
+    stop below count 2, and the greedy left-to-right merge."""
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(n_merges):
+        counts: dict[tuple[str, str], int] = {}
+        for syms, n in words:
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + n
+        if not counts:
+            break
+        (a, b), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        if cnt < 2:
+            break
+        merges.append((a, b, cnt))
+        words = [(_merge_list(syms, a, b), n) for syms, n in words]
+    return merges
+
+
+def _merge_list(syms: list[str], a: str, b: str) -> list[str]:
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 def merges_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
@@ -527,16 +615,7 @@ def encode_words_udf(
             return []
         syms[-1] += END_OF_WORD
         for a, b in ranked:
-            out, i = [], 0
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
+            syms = _merge_list(syms, a, b)
         return syms
 
     @F.pandas_udf(ArrayType(StringType()))

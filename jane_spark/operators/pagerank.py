@@ -27,16 +27,43 @@ scalar aggregate per round, same as the components fixpoint's
 convergence probe. 5 fixed iterations — rank ordering stabilizes in
 3-4 rounds on power-law graphs; fixed count keeps the plan static and
 the oracle unrollable.
+
+Two paths, one result. The distributed loop above costs ~8 driver-
+scheduled jobs per round whatever the graph size — 46 jobs and most of
+the build time on a graph of a few hundred edges. So when the
+aggregated edge table fits one task (``engine.onetask.one_task_rows``:
+at most ``MAX_ROWS`` rows, a bound set from measured timings of both
+paths), ``coalesce(1).mapInArrow`` runs all ``iters`` rounds of the
+same integer updates inside one Python task: Spark's bigint semantics
+(``div`` truncates toward zero; overflow and division by zero raise
+under ANSI, wrap or give NULL without it; ``sum`` skips NULLs; a NULL
+node id is ranked but joins nothing) reproduce the distributed ranks
+exactly. Larger tables and node ids whose Python equality is not
+Spark's (floats, collated strings, nested types) keep the distributed
+loop.
+Either way the result is a checkpoint of the ranks, so the returned
+plan holds no Python stage.
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
+from jane_spark.engine.onetask import ansi_enabled, one_task_rows
 
 SCALE = 10**9
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
 
 
 def pagerank(
@@ -73,18 +100,31 @@ def pagerank(
         # whole-graph cost on the TextRank word graph (r10)
         .localCheckpoint(eager=True)
     )
+    endpoints = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
+    )
+    node_t = endpoints.schema["node"].dataType
+    # only ids whose Python equality is Spark's grouping equality
+    rows = (
+        one_task_rows(e)
+        if isinstance(node_t, IntegralType) or node_t == StringType()
+        else None
+    )
+    if rows == 0:
+        raise ValueError("edge table is empty: no nodes to rank")
+    if rows is not None:
+        e_ids = persistent_rdd_ids(spark) - scaffold_pre
+        ranks = _ranks_in_one_task(e, node_t, num, den, iters)
+        ranks = ranks.localCheckpoint(eager=True)
+        unpersist_ids(spark, e_ids)
+        return ranks.select("node", F.col("r").alias("rank_scaled"))
     # lazy mark + the node count as its materializer (the
     # connected_components single-consumer pattern): the count's plan
     # contains the mark exactly once, so there is no concurrent-
     # consumer duplication, and the scaffold costs one action fewer.
     # Every later consumer (ranks init, dangling, per-round joins)
     # reads the already-materialized blocks.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = endpoints.distinct().localCheckpoint(eager=False)
     n = nodes.count()
     if n == 0:
         raise ValueError("edge table is empty: no nodes to rank")
@@ -168,6 +208,118 @@ def pagerank(
         gen_ids = new_ids
     unpersist_ids(spark, scaffold_ids)
     return ranks.select("node", F.col("r").alias("rank_scaled"))
+
+
+def _ranks_in_one_task(
+    e: DataFrame, node_t, num: int, den: int, iters: int
+) -> DataFrame:
+    """``(node, r)`` from every round of :func:`_integer_ranks` run by
+    one Python task over the whole aggregated edge table ``e``."""
+    import pyarrow as pa
+
+    ansi = ansi_enabled(e)
+
+    def run(batches):
+        cols: dict[str, list] = {"src": [], "dst": [], "w": []}
+        node_type = None
+        for b in batches:
+            node_type = b.schema.field("src").type
+            for c, vals in cols.items():
+                vals += b.column(c).to_pylist()
+        if node_type is None:
+            return
+        ranks = _integer_ranks(
+            cols["src"], cols["dst"], cols["w"], num, den, iters, ansi
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(list(ranks), node_type),
+                pa.array(list(ranks.values()), pa.int64()),
+            ],
+            names=["node", "r"],
+        )
+
+    return (
+        e.select(
+            F.col("src").cast(node_t).alias("src"),
+            F.col("dst").cast(node_t).alias("dst"),
+            "w",
+        )
+        .coalesce(1)
+        .mapInArrow(
+            run,
+            StructType(
+                [StructField("node", node_t), StructField("r", LongType())]
+            ),
+        )
+    )
+
+
+def _integer_ranks(
+    src: list,
+    dst: list,
+    w: list,
+    num: int,
+    den: int,
+    iters: int,
+    ansi: bool = True,
+) -> dict:
+    """The distributed loop's rounds on Python ints: node -> rank after
+    ``iters`` rounds over the aggregated edges ``(src[i], dst[i], w[i])``
+    (one row per (src, dst), weights may be NULL). Every operation is
+    the bigint operation the SQL loop evaluates, so the ranks are
+    identical to it; ``ansi`` selects Spark's ANSI or legacy overflow
+    and division-by-zero behaviour."""
+
+    def fit(x):
+        if _LONG_MIN <= x <= _LONG_MAX:
+            return x
+        if ansi:
+            raise ArithmeticError("[ARITHMETIC_OVERFLOW] long overflow")
+        return (x - _LONG_MIN) % 2**64 + _LONG_MIN
+
+    def div(a, b):
+        # Spark `div`: truncates toward zero
+        if b == 0:
+            if ansi:
+                raise ArithmeticError("[DIVIDE_BY_ZERO] Division by zero")
+            return None
+        q = abs(a) // abs(b)
+        return fit(q if (a < 0) == (b < 0) else -q)
+
+    def add(acc: dict, key, x) -> None:
+        # sum(): NULLs skipped, a group of only NULLs sums to NULL
+        prev = acc.setdefault(key, None)
+        if x is not None:
+            acc[key] = x if prev is None else fit(prev + x)
+
+    nodes = dict.fromkeys(itertools.chain(src, dst))
+    n = len(nodes)
+    outw: dict = {}
+    for s, x in zip(src, w):
+        add(outw, s, x)
+    # the SQL loop's equi-joins never match a NULL id: its out-edges
+    # carry nothing, its inflow and dangling mass are never read
+    flows = [
+        (s, d, x, outw[s])
+        for s, d, x in zip(src, dst, w)
+        if s is not None and x is not None and outw[s] is not None
+    ]
+    dangling = [v for v in nodes if v is not None and v not in outw]
+    base = ((den - num) * SCALE) // (den * n)
+    ranks = dict.fromkeys(nodes, SCALE // n)
+    for _ in range(iters):
+        inflow: dict = {}
+        for s, d, x, ow in flows:
+            add(inflow, d, div(fit(ranks[s] * x), ow))
+        mass: dict = {}
+        for v in dangling:
+            add(mass, None, ranks[v])
+        share = div(mass.get(None) or 0, n)
+        for v in nodes:
+            into = (inflow.get(v) if v is not None else None) or 0
+            ranks[v] = fit(base + div(fit(num * fit(into + share)), den))
+    return ranks
 
 
 def event_transition_edges(events: DataFrame) -> DataFrame:

@@ -90,7 +90,6 @@ SLOW_TEST_NAMES = (
     "test_two_stage_recall_vs_exact",
     "test_star_fallback_matches_propagation_random",
     "test_encode_words_udf_parity_and_scale",
-    "test_train_matches_python_twin",
     "test_poisson_bootstrap_laws",
     "test_stupid_backoff_hand_computed",
     "test_with_normalized_url_equals_inline_pair",
@@ -108,21 +107,16 @@ SLOW_TEST_NAMES = (
     "test_q_i5_contract_drops_late_clones",       # parity[q_i5_late_drop] stays
     "test_oracle_parity[q_k23_ivf_pq]",           # residual/adc/codes parities stay
     "test_oracle_parity[q_k3_ivf_portable]",      # ivf_recall + ivf_incr parity stay
-    "test_oracle_parity[q_k27_pagerank]",         # textrank parity (superset) stays
     "test_oracle_parity[q_k37_overlap_matrix]",   # containment parity stays
     "test_url_normalize_cases",                   # 8 smaller url tests stay
     "test_station_xml_response_stages_golden",    # fdsnws: 50+ others stay
-    "test_train_on_driver_corpus_matches_twin",   # bpe aa_runs + encode parity stay
-    "test_oracle_parity[q_k22_bpe_train]",        # bpe_pairs/encode parities stay
     "test_event_beachballs_index_without_fm_columns",  # 4 pure-python bb tests stay
     "test_rows_only_smoke[q_k49_opq]",            # opq2/dimperm parities stay
     "test_oracle_parity[q_k33_mmr]",              # mmr_select determinism test stays
     "test_oracle_parity[q_k39_ann_audit]",        # ann ladder family stays
     "test_dataselect_bulk_matches_union_of_single_queries",
     "test_advice_edge_cases_r10",
-    "test_encode_matches_python_twin",            # bpe
     "test_unigram_estep_counts_match_python",     # unigram_train parity stays
-    "test_token_stats_matches_python_twin",
     "test_hard_negative_topk_ann_candidates_identity",  # hardneg parity stays
     "test_oracle_parity[q_k23_adc_rerank]",       # pq_adc/pq_codes parities stay
     "test_exact_dup_spans_brute_force",           # span_removal parity stays

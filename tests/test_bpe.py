@@ -93,6 +93,28 @@ def test_train_on_driver_corpus_matches_twin(spark, sf_dir):
     assert train_bpe(docs, 6) == py_train_bpe(texts, 6)
 
 
+def test_non_bmp_characters_stay_whole_symbols(spark):
+    """Symbols are code points: a character outside the BMP (a UTF-16
+    surrogate pair in the JVM) must not split into two halves in
+    training, encoding or token stats."""
+    texts = ["😀😀 😀😀 😀😀 x😀", "𝔸b𝔸b 𝔸b𝔸b a😀b 𝔸"]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    merges = train_bpe(docs, 5)
+    assert merges == py_train_bpe(texts, 5)
+    assert merges[0] == ("😀", "😀</w>", 3)
+    words = sorted({w for t in texts for w in t.split(" ") if w})
+    wdf = spark.createDataFrame([(w,) for w in words], "word string")
+    got = {r.word: r.tokens for r in encode_words(wdf, merges).collect()}
+    assert got == {w: py_encode(w, merges) for w in words}
+    stats = bpe_token_stats(docs, merges).collect()
+    assert {r.doc_id: r.n_bpe_tokens for r in stats} == {
+        i: sum(len(py_encode(w, merges)) for w in t.split(" ") if w)
+        for i, t in enumerate(texts)
+    }
+
+
 def test_greedy_overlap_semantics(spark):
     # 'aaa' + merge (a,a): non-overlapping left-to-right -> ['aa','a</w>']
     docs = spark.createDataFrame([(0, "aaa aaa")], "doc_id long, text string")

@@ -477,6 +477,33 @@ def test_no_python_eval_outside_allowlist(spark, sf_dir):
     assert not missing, f"allowlisted but JVM-only now: {missing}"
 
 
+def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
+    """PageRank and BPE training run their whole loop in one Arrow task
+    when the table fits one (engine.onetask): building these rows at
+    the test SF launches a handful of jobs, not one chain per round
+    (46, 46 and 20 with the distributed loops). Jobs are counted per
+    job group, as perfbench/curate.py counts them. The PageRank rows
+    return a checkpoint of the ranks, so their plans hold no Python
+    stage."""
+    from jane_spark.contracts import REGISTRY
+
+    sc = spark.sparkContext
+    budget = {"q_k27_pagerank": 8, "q_k34_textrank": 8, "q_k22_bpe_train": 6}
+    jobs = {}
+    for name in budget:
+        group = f"job-budget-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = REGISTRY[name].spark_fn(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        if name != "q_k22_bpe_train":
+            plan = _executed_plan(df)
+            assert not any(m in plan for m in _PY_MARKERS), (name, plan)
+    assert all(jobs[n] <= cap for n, cap in budget.items()), jobs
+
+
 def test_lm_scoring_joins_broadcast(spark, sf_dir):
     """T28/T33: every count-table scoring join must broadcast (the
     tables are vocabulary-bounded) — a sort-merge here would shuffle
