@@ -39,7 +39,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jane_spark.engine.ckpt import Generations
+
 END_OF_WORD = "</w>"
+# train_bpe's distributed loop cuts lineage every CHECKPOINT_EVERY merges:
+# re-running up to that many row-local merge folds per argmax is cheaper
+# than materializing the vocabulary every merge (measured ~2x, bench corpus)
+CHECKPOINT_EVERY = 3
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -119,64 +125,45 @@ def train_bpe(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    checkpoint_every: int = 3,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` ranked merges; returns
     [(left, right, pair_count), ...] in rank order. Ties break by
     (count desc, left asc, right asc) — byte-deterministic across
     partitionings. Only n_merges single-row collects reach the driver.
 
-    ``checkpoint_every`` balances lineage depth against checkpoint
-    jobs: between cuts each argmax re-runs up to that many row-local
-    merge folds over the vocabulary table — cheaper than materializing
-    it every iteration (measured ~2× on the bench corpus).
-
     A vocabulary table that fits one task
     (``engine.onetask.one_task_rows``) skips the loop: one
     ``coalesce(1).mapInArrow`` task runs every merge
     (:func:`_merge_loop`) over the symbols built above and returns the
     same list."""
-    from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
     from jane_spark.engine.onetask import one_task_rows
 
-    spark = docs.sparkSession
     vocab = word_counts(docs, text_col).select(
         _initial_symbols(F.col("word")).alias("syms"), "n"
     )
-    pre = persistent_rdd_ids(spark)
-    vocab = vocab.localCheckpoint(eager=True)
-    gen_ids = persistent_rdd_ids(spark) - pre
-    if one_task_rows(vocab) is not None:
-        merges = _merges_in_one_task(vocab, n_merges)
-        unpersist_ids(spark, gen_ids)
+    # the result is a plain driver list: every checkpoint dies at exit
+    with Generations(docs.sparkSession) as g:
+        vocab = g.cut(vocab)
+        if one_task_rows(vocab) is not None:
+            return _merges_in_one_task(vocab, n_merges)
+        merges: list[tuple[str, str, int]] = []
+        for i in range(n_merges):
+            best = (
+                vocab.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "n")
+                .groupBy("p.left", "p.right")
+                .agg(F.sum("n").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("left").asc(), F.col("right").asc())
+                .limit(1)
+                .collect()
+            )
+            if not best or best[0]["cnt"] < 2:
+                break  # nothing left worth merging
+            a, b, cnt = best[0]["left"], best[0]["right"], int(best[0]["cnt"])
+            merges.append((a, b, cnt))
+            vocab = vocab.select(_merge_pair(F.col("syms"), a, b).alias("syms"), "n")
+            if (i + 1) % CHECKPOINT_EVERY == 0:
+                vocab = g.cut(vocab)
         return merges
-    merges: list[tuple[str, str, int]] = []
-    since_checkpoint = 0
-    for _ in range(n_merges):
-        best = (
-            vocab.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "n")
-            .groupBy("p.left", "p.right")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("left").asc(), F.col("right").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["cnt"] < 2:
-            break  # nothing left worth merging
-        a, b, cnt = best[0]["left"], best[0]["right"], int(best[0]["cnt"])
-        merges.append((a, b, cnt))
-        vocab = vocab.select(_merge_pair(F.col("syms"), a, b).alias("syms"), "n")
-        since_checkpoint += 1
-        if since_checkpoint >= checkpoint_every:
-            pre = persistent_rdd_ids(spark)
-            vocab = vocab.localCheckpoint(eager=True)
-            new_ids = persistent_rdd_ids(spark) - pre
-            unpersist_ids(spark, gen_ids)  # the pre-cut generation is dead
-            gen_ids = new_ids
-            since_checkpoint = 0
-    # the result is a plain driver list — every checkpoint is dead
-    unpersist_ids(spark, gen_ids)
-    return merges
 
 
 def _merges_in_one_task(
@@ -735,43 +722,38 @@ def train_unigram(
     vocabulary-BOUNDED collect (train_bpe's loop contract: driver
     iteration is fine when each round's driver data is dimension-
     bounded). Pinned against a pure-Python twin in tests."""
-    from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
-
-    spark = docs.sparkSession
-    pre = persistent_rdd_ids(spark)
-    wc = word_counts(docs, text_col).localCheckpoint(eager=True)
-    wc_ids = persistent_rdd_ids(spark) - pre
-    seed = seed_unigram_vocab(
-        docs, max_piece_len, seed_size, text_col, wc=wc
-    )
-    scores = _integer_scores(seed)
-    counts: dict[str, int] = dict(seed)
-    for _ in range(n_iters):
-        enc = unigram_encode(wc, scores)
-        used = (
-            enc.select(F.explode("tokens").alias("piece"), "n")
-            .groupBy("piece")
-            .agg(F.sum("n").alias("cnt"))
+    # the result is a plain driver list: the word table dies at exit
+    with Generations(docs.sparkSession) as g:
+        wc = g.hold(word_counts(docs, text_col))
+        seed = seed_unigram_vocab(
+            docs, max_piece_len, seed_size, text_col, wc=wc
         )
-        counts = {r["piece"]: int(r["cnt"]) for r in used.collect()}
-        # pieces never chosen by any Viterbi path vanish implicitly;
-        # prune the weakest used multi-char pieces explicitly
-        # prune order fully deterministic: (count asc, piece asc)
-        multis = sorted(
-            (c, p) for p, c in counts.items() if len(p) > 1
-        )
-        n_prune = int(len(multis) * prune_frac)
-        for _, p in multis[:n_prune]:
-            del counts[p]
-        # the alphabet survives even with zero standalone use
-        for p, c in seed:
-            if len(p) == 1 and p not in counts:
-                counts[p] = 0
-        scores = _integer_scores(
-            [(p, max(c, 1)) for p, c in counts.items()]
-        )
-    # the result is a plain driver list — the word table is dead
-    unpersist_ids(spark, wc_ids)
+        scores = _integer_scores(seed)
+        counts: dict[str, int] = dict(seed)
+        for _ in range(n_iters):
+            enc = unigram_encode(wc, scores)
+            used = (
+                enc.select(F.explode("tokens").alias("piece"), "n")
+                .groupBy("piece")
+                .agg(F.sum("n").alias("cnt"))
+            )
+            counts = {r["piece"]: int(r["cnt"]) for r in used.collect()}
+            # pieces never chosen by any Viterbi path vanish implicitly;
+            # prune the weakest used multi-char pieces explicitly
+            # prune order fully deterministic: (count asc, piece asc)
+            multis = sorted(
+                (c, p) for p, c in counts.items() if len(p) > 1
+            )
+            n_prune = int(len(multis) * prune_frac)
+            for _, p in multis[:n_prune]:
+                del counts[p]
+            # the alphabet survives even with zero standalone use
+            for p, c in seed:
+                if len(p) == 1 and p not in counts:
+                    counts[p] = 0
+            scores = _integer_scores(
+                [(p, max(c, 1)) for p, c in counts.items()]
+            )
     return sorted(
         ((p, scores[p], c) for p, c in counts.items()),
         key=lambda t: (-t[2], t[0]),

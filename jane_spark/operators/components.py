@@ -12,8 +12,8 @@ Scale shape: each round is one join + one min-aggregate — two shuffles
 on uniformly-hashed ids — and the round count is the largest cluster
 DIAMETER, not the corpus size. Near-dup clusters are dense and shallow
 (diameter ≲ 3 in practice), so this converges in a handful of rounds.
-``localCheckpoint(eager=True)`` truncates lineage each round, keeping
-plans O(1) instead of O(rounds). For adversarial chain-shaped graphs
+A ``localCheckpoint`` per round truncates lineage, keeping plans O(1)
+instead of O(rounds). For adversarial chain-shaped graphs
 (diameter > ``max_iter``) the solver falls back to the two-phase
 large-star/small-star alternation (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14 — public algorithm),
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
+from jane_spark.engine.ckpt import Generations
 
 
 def connected_components(
@@ -50,64 +50,38 @@ def connected_components(
     chains: diameter > max_iter), the large-star/small-star fallback
     finishes the job in O(log² n) rounds regardless of diameter.
     """
-    spark = edges.sparkSession
-    pre = persistent_rdd_ids(spark)
     e = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
-    e_ids = persistent_rdd_ids(spark) - pre
-
-    if nodes is None:
-        labels = e.select(F.col("src").alias("id")).distinct()
-    else:
-        labels = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
-    # lazy mark + the convergence aggregate as its materializer: the
-    # agg's plan contains the mark exactly ONCE, so there is no
-    # concurrent-consumer duplication (the 6c40351 failure mode needs
-    # two not-yet-materialized consumers in one action); each round
-    # costs ONE driver action instead of checkpoint + probe (guide
-    # §5 localCheckpoint, §1.2 driver round-trips; r15). Generation
-    # r-1 is provably dead once generation r has materialized from it
-    # — unpersist it then (engine.ckpt doc), so the loop holds at most
-    # two generations instead of every round's table.
-    pre = persistent_rdd_ids(spark)
-    labels = labels.select("id", F.col("id").alias("comp")).localCheckpoint(
-        eager=False
-    )
-    total = labels.agg(F.sum("comp")).first()[0]
-    gen_ids = persistent_rdd_ids(spark) - pre
-
-    converged = False
-    for _ in range(max_iter):
-        msgs = e.join(labels, e.src == labels.id).select(
-            F.col("dst").alias("id"), "comp"
+    with Generations(edges.sparkSession) as g:
+        e = g.hold(e.distinct())
+        if nodes is None:
+            labels = e.select(F.col("src").alias("id")).distinct()
+        else:
+            labels = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
+        # lazy cuts probed by the convergence sum: one driver action per
+        # round instead of checkpoint + probe (guide §5 localCheckpoint,
+        # §1.2 driver round-trips; r15)
+        labels, total = g.cut(
+            labels.select("id", F.col("id").alias("comp")), probe=_comp_sum
         )
-        pre = persistent_rdd_ids(spark)
-        new = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=False)
-        )
-        new_total = new.agg(F.sum("comp")).first()[0]
-        labels = new
-        new_ids = persistent_rdd_ids(spark) - pre
-        unpersist_ids(spark, gen_ids)
-        gen_ids = new_ids
-        if new_total == total:
-            converged = True
-            break
-        total = new_total
-    if not converged:
-        out = _star_components(e, labels.select("id"))
-        # the star fixpoint's returned plan references its own final
-        # edge table and the last labels generation; e is dead
-        unpersist_ids(spark, e_ids)
-        return out
-    # converged: the returned plan is a scan of the last generation
-    # only — the symmetrized edge table is dead
-    unpersist_ids(spark, e_ids)
-    return labels
+        for _ in range(max_iter):
+            msgs = e.join(labels, e.src == labels.id).select(
+                F.col("dst").alias("id"), "comp"
+            )
+            labels, new_total = g.cut(
+                labels.unionByName(msgs)
+                .groupBy("id")
+                .agg(F.min("comp").alias("comp")),
+                probe=_comp_sum,
+            )
+            if new_total == total:
+                return g.keep(labels)
+            total = new_total
+        return g.keep(_star_components(e, labels.select("id")))
+
+
+def _comp_sum(labels: DataFrame):
+    return labels.agg(F.sum("comp")).first()[0]
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
@@ -131,10 +105,6 @@ def _star_components(e: DataFrame, node_ids: DataFrame) -> DataFrame:
     Each half-round is one groupBy + one equi-join on node id: the same
     two-shuffle shape as a propagation round, but diameter-independent.
     """
-    spark = e.sparkSession
-    s = e  # symmetric, distinct, no self-loops (built by caller)
-    gen_ids: set[int] = set()  # the caller owns e's checkpoint
-
     def checksum(df: DataFrame) -> tuple:
         canon = df.filter(F.col("src") < F.col("dst"))
         row = canon.agg(
@@ -144,49 +114,47 @@ def _star_components(e: DataFrame, node_ids: DataFrame) -> DataFrame:
         ).first()
         return (row["n"], row["h"])
 
+    s = e  # symmetric, distinct, no self-loops (built by caller)
     prev = checksum(s)
-    for _ in range(100):  # safety cap >> the proven O(log^2) bound
-        # large-star
-        mins = s.groupBy("src").agg(F.min("dst").alias("mn"))
-        mm = mins.select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
-        large = (
-            s.join(mm, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+    with Generations(e.sparkSession) as g:
+        for _ in range(100):  # safety cap >> the proven O(log^2) bound
+            # large-star
+            mins = s.groupBy("src").agg(F.min("dst").alias("mn"))
+            mm = mins.select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
+            large = (
+                s.join(mm, "src")
+                .filter(F.col("dst") > F.col("src"))
+                .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+            )
+            s = g.cut(_symmetrize(large))
+            # small-star (directed larger -> smaller)
+            d = s.filter(F.col("dst") < F.col("src"))
+            dmins = d.groupBy("src").agg(F.min("dst").alias("m"))
+            small = (
+                d.join(dmins, "src")
+                .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+                .unionByName(
+                    dmins.select(F.col("src").alias("a"), F.col("m").alias("b"))
+                )
+            )
+            s = g.cut(_symmetrize(small))
+            cur = checksum(s)
+            if cur == prev:
+                break
+            prev = cur
+        else:
+            raise RuntimeError("star alternation failed to converge in 100 rounds")
+        # fixed point: edges are (member, root) stars — comp = min over the
+        # closed neighborhood; isolated nodes keep their own id
+        lbl = s.groupBy("src").agg(F.min("dst").alias("mn"))
+        lbl = lbl.select(
+            F.col("src").alias("id"), F.least(F.col("src"), F.col("mn")).alias("comp")
         )
-        pre = persistent_rdd_ids(spark)
-        s = _symmetrize(large).localCheckpoint(eager=True)
-        half_ids = persistent_rdd_ids(spark) - pre
-        unpersist_ids(spark, gen_ids)  # the pre-large generation is dead
-        # small-star (directed larger -> smaller)
-        d = s.filter(F.col("dst") < F.col("src"))
-        dmins = d.groupBy("src").agg(F.min("dst").alias("m"))
-        small = (
-            d.join(dmins, "src")
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                dmins.select(F.col("src").alias("a"), F.col("m").alias("b"))
+        return g.keep(
+            node_ids.join(lbl, "id", "left").select(
+                "id", F.coalesce(F.col("comp"), F.col("id")).alias("comp")
             )
         )
-        pre = persistent_rdd_ids(spark)
-        s = _symmetrize(small).localCheckpoint(eager=True)
-        gen_ids = persistent_rdd_ids(spark) - pre
-        unpersist_ids(spark, half_ids)  # the large-star half is dead
-        cur = checksum(s)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError("star alternation failed to converge in 100 rounds")
-    # fixed point: edges are (member, root) stars — comp = min over the
-    # closed neighborhood; isolated nodes keep their own id
-    lbl = s.groupBy("src").agg(F.min("dst").alias("mn"))
-    lbl = lbl.select(
-        F.col("src").alias("id"), F.least(F.col("src"), F.col("mn")).alias("comp")
-    )
-    return node_ids.join(lbl, "id", "left").select(
-        "id", F.coalesce(F.col("comp"), F.col("id")).alias("comp")
-    )
 
 
 def cluster_canonical(labels: DataFrame) -> DataFrame:

@@ -59,7 +59,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
+from jane_spark.engine.ckpt import Generations
 from jane_spark.engine.onetask import ansi_enabled, one_task_rows
 
 SCALE = 10**9
@@ -84,130 +84,104 @@ def pagerank(
     if iters < 1:
         raise ValueError("iters must be >= 1")
 
-    spark = edges.sparkSession
-    scaffold_pre = persistent_rdd_ids(spark)
     w = (F.lit(1) if weight is None else F.col(weight)).cast("bigint")
-    e = (
-        edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
+    with Generations(edges.sparkSession) as g:
         # checkpoint the aggregated edge table FIRST: everything below
         # (nodes, outw, the per-iteration dangling probe) derives from
         # it, and an unchecked lineage re-runs the upstream corpus-
         # sized edge build once per materialization — measured 7x the
         # whole-graph cost on the TextRank word graph (r10)
-        .localCheckpoint(eager=True)
-    )
-    endpoints = e.select(F.col("src").alias("node")).unionByName(
-        e.select(F.col("dst").alias("node"))
-    )
-    node_t = endpoints.schema["node"].dataType
-    # only ids whose Python equality is Spark's grouping equality
-    rows = (
-        one_task_rows(e)
-        if isinstance(node_t, IntegralType) or node_t == StringType()
-        else None
-    )
-    if rows == 0:
-        raise ValueError("edge table is empty: no nodes to rank")
-    if rows is not None:
-        e_ids = persistent_rdd_ids(spark) - scaffold_pre
-        ranks = _ranks_in_one_task(e, node_t, num, den, iters)
-        ranks = ranks.localCheckpoint(eager=True)
-        unpersist_ids(spark, e_ids)
-        return ranks.select("node", F.col("r").alias("rank_scaled"))
-    # lazy mark + the node count as its materializer (the
-    # connected_components single-consumer pattern): the count's plan
-    # contains the mark exactly once, so there is no concurrent-
-    # consumer duplication, and the scaffold costs one action fewer.
-    # Every later consumer (ranks init, dangling, per-round joins)
-    # reads the already-materialized blocks.
-    nodes = endpoints.distinct().localCheckpoint(eager=False)
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("edge table is empty: no nodes to rank")
-    # outw is consumed exactly twice below (ew build, dangling set) and
-    # derives from the CHECKPOINTED e — recomputing that one groupBy
-    # inside each consumer is cheaper than an extra eager checkpoint
-    # action (r15 optimization round: every eager materialization is a
-    # blocking driver round-trip)
-    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    # ew and dangling as lazy marks: each appears exactly ONCE in the
-    # first round's ranks-checkpoint action (inflow's plan holds ew
-    # once, dang_row's holds dangling once — disjoint subtrees), so
-    # both materialize there without the 6c40351 duplication mode and
-    # the scaffold saves two more blocking actions. Rounds 2+ read
-    # their materialized blocks.
-    ew = e.join(outw, "src").localCheckpoint(eager=False)
-    # the dangling-node set (no out-edges) is FIXED across iterations:
-    # derive it once instead of re-running the anti-join per round
-    dangling = (
-        nodes.join(outw, nodes.node == outw.src, "left_anti")
-        .select("node")
-        .localCheckpoint(eager=False)
-    )
-
-    base = ((den - num) * SCALE) // (den * n)
-    # scaffolding (e, nodes, ew, dangling) is only needed until the
-    # final round's ranks materialize; the returned plan scans the last
-    # ranks checkpoint alone (engine.ckpt doc)
-    scaffold_ids = persistent_rdd_ids(spark) - scaffold_pre
-    pre = persistent_rdd_ids(spark)
-    ranks = nodes.select(
-        "node", F.lit(SCALE // n).cast("bigint").alias("r")
-    ).localCheckpoint(eager=True)
-    gen_ids = persistent_rdd_ids(spark) - pre
-
-    for _ in range(iters):
-        inflow = (
-            ew.join(ranks, ew.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(r * w) div ow").alias("c"),
+        e = g.hold(
+            edges.select(
+                F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
+            .groupBy("src", "dst")
+            .agg(F.sum("w").alias("w"))
         )
-        # dangling mass IN-PLAN (one-row broadcast) instead of a
-        # blocking driver first() per round: the update expression is
-        # the same BIGINT arithmetic — sum(r) over the fixed dangling
-        # set, div n — evaluated by the engine instead of the driver,
-        # so each iteration costs ONE action (the checkpoint) and the
-        # driver never stalls on a scalar round-trip (guide §5: the
-        # driver should do almost no data work)
-        dang_row = (
-            ranks.join(dangling, "node", "left_semi")
-            .agg(
-                F.expr(
-                    f"coalesce(sum(r), CAST(0 AS BIGINT)) div {n}"
-                ).alias("__dshare")
-            )
+        endpoints = e.select(F.col("src").alias("node")).unionByName(
+            e.select(F.col("dst").alias("node"))
         )
-        pre = persistent_rdd_ids(spark)
-        ranks = (
-            nodes.join(inflow, "node", "left")
-            .crossJoin(F.broadcast(dang_row))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({num} * (coalesce(inflow, CAST(0 AS BIGINT))"
-                        f" + __dshare)) div {den}"
-                    )
+        node_t = endpoints.schema["node"].dataType
+        # only ids whose Python equality is Spark's grouping equality
+        rows = (
+            one_task_rows(e)
+            if isinstance(node_t, IntegralType) or node_t == StringType()
+            else None
+        )
+        if rows == 0:
+            raise ValueError("edge table is empty: no nodes to rank")
+        if rows is not None:
+            ranks = g.cut(_ranks_in_one_task(e, node_t, num, den, iters))
+            return g.keep(ranks.select("node", F.col("r").alias("rank_scaled")))
+        # lazy hold filled by the node count; every later consumer
+        # (ranks init, dangling, per-round joins) reads its blocks
+        nodes = g.hold(endpoints.distinct(), eager=False)
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("edge table is empty: no nodes to rank")
+        # outw is consumed exactly twice below (ew build, dangling set)
+        # and derives from the CHECKPOINTED e — recomputing that one
+        # groupBy inside each consumer is cheaper than an extra eager
+        # checkpoint action (r15 optimization round: every eager
+        # materialization is a blocking driver round-trip)
+        outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
+        # lazy holds: the first round's cut reads each exactly once (in
+        # disjoint subtrees) and fills both, saving two blocking actions
+        ew = g.hold(e.join(outw, "src"), eager=False)
+        # the dangling-node set (no out-edges) is FIXED across
+        # iterations: derive it once instead of re-running the anti-join
+        # per round
+        dangling = g.hold(
+            nodes.join(outw, nodes.node == outw.src, "left_anti").select("node"),
+            eager=False,
+        )
+
+        base = ((den - num) * SCALE) // (den * n)
+        ranks = g.cut(
+            nodes.select("node", F.lit(SCALE // n).cast("bigint").alias("r"))
+        )
+        for _ in range(iters):
+            inflow = (
+                ew.join(ranks, ew.src == ranks.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    F.expr("(r * w) div ow").alias("c"),
                 )
-                .cast("bigint")
-                .alias("r"),
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"))
             )
-            .localCheckpoint(eager=True)
-        )
-        new_ids = persistent_rdd_ids(spark) - pre
-        unpersist_ids(spark, gen_ids)  # round r-1's ranks are dead
-        gen_ids = new_ids
-    unpersist_ids(spark, scaffold_ids)
-    return ranks.select("node", F.col("r").alias("rank_scaled"))
+            # dangling mass IN-PLAN (one-row broadcast) instead of a
+            # blocking driver first() per round: the update expression
+            # is the same BIGINT arithmetic — sum(r) over the fixed
+            # dangling set, div n — evaluated by the engine instead of
+            # the driver, so each iteration costs ONE action (the cut)
+            # and the driver never stalls on a scalar round-trip
+            # (guide §5: the driver should do almost no data work)
+            dang_row = (
+                ranks.join(dangling, "node", "left_semi")
+                .agg(
+                    F.expr(
+                        f"coalesce(sum(r), CAST(0 AS BIGINT)) div {n}"
+                    ).alias("__dshare")
+                )
+            )
+            ranks = g.cut(
+                nodes.join(inflow, "node", "left")
+                .crossJoin(F.broadcast(dang_row))
+                .select(
+                    "node",
+                    (
+                        F.lit(base)
+                        + F.expr(
+                            f"({num} * (coalesce(inflow, CAST(0 AS BIGINT))"
+                            f" + __dshare)) div {den}"
+                        )
+                    )
+                    .cast("bigint")
+                    .alias("r"),
+                )
+            )
+        return g.keep(ranks.select("node", F.col("r").alias("rank_scaled")))
 
 
 def _ranks_in_one_task(

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jane_spark.engine.ckpt import Generations
 from jane_spark.functions.arrays import cosine_from_norms, norm
 from jane_spark.operators.topk import top_k_per_group
 
@@ -2473,6 +2474,12 @@ def nn_descent_graph(
     corpus size — set the round cost. ``exclude_mod`` carves out the
     held-out query ids (the q_k48 audit framing) so the graph is
     built over the corpus only.
+
+    Single caller at a time per session: the build sets the session's
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` to 64k
+    and restores the previous value when it returns, so
+    queries run concurrently on the same session see the raised floor,
+    and a concurrent change to that conf is overwritten.
     """
     if degree < 1 or iters < 0:
         raise ValueError("need degree >= 1 and iters >= 0")
@@ -2493,27 +2500,25 @@ def nn_descent_graph(
     # regressed — see engine/session.py). Scoping it here hits only
     # the three eager checkpoint actions this builder runs; the conf
     # is restored before the (lazy) final plan is returned. Idle
-    # single-row A/B: 8.1 s (default floor) -> 6.0 s (scoped).
-    # CONSTRAINT (ADVICE r15, the engine/ckpt.py caveat): the
-    # set/restore mutates SESSION-global SQL conf for the build's
-    # duration — safe under this engine's single-threaded-driver
-    # assumption, but a query launched concurrently on the same
-    # session would inherit the 64k floor, and a concurrent setter
-    # would be clobbered by the finally-restore.
+    # single-row A/B: 8.1 s (default floor) -> 6.0 s (scoped). The
+    # set/restore is session-global: see the single-caller contract in
+    # the docstring (ADVICE r15).
     spark = vectors.sparkSession
     _MPS = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     _mps_prev = spark.conf.get(_MPS)
     spark.conf.set(_MPS, "64k")
     try:
-        return _nn_descent_graph_build(
-            vectors, id_col, vec_col, degree, iters, bucket_bits,
-            n_slices, build_degree, dim, exclude_mod, rank_round_dp,
-        )
+        with Generations(spark) as g:
+            return g.keep(_nn_descent_graph_build(
+                g, vectors, id_col, vec_col, degree, iters, bucket_bits,
+                n_slices, build_degree, dim, exclude_mod, rank_round_dp,
+            ))
     finally:
         spark.conf.set(_MPS, _mps_prev)
 
 
 def _nn_descent_graph_build(
+    g: Generations,
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
@@ -2527,7 +2532,8 @@ def _nn_descent_graph_build(
     rank_round_dp: int,
 ) -> DataFrame:
     """Body of :func:`nn_descent_graph` (docstring above); runs under
-    the scoped coalesce-floor conf set by the wrapper."""
+    the scoped coalesce-floor conf set by the wrapper and cuts each
+    round's edge table through its ``g``."""
     base = vectors.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
     )
@@ -2597,17 +2603,14 @@ def _nn_descent_graph_build(
             ).alias("sim"),
         )
     )
-    from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
-
-    spark = vectors.sparkSession
-    pre = persistent_rdd_ids(spark)
-    edges = top_k_per_group(
-        seed,
-        ["a_id"],
-        [F.col("sim").desc(), F.col("b_id").asc()],
-        build_degree,
-    ).drop("rn").localCheckpoint(eager=True)
-    gen_ids = persistent_rdd_ids(spark) - pre
+    edges = g.cut(
+        top_k_per_group(
+            seed,
+            ["a_id"],
+            [F.col("sim").desc(), F.col("b_id").asc()],
+            build_degree,
+        ).drop("rn")
+    )
 
     for _ in range(int(iters)):
         und = edges.select("a_id", "b_id").unionByName(
@@ -2642,16 +2645,14 @@ def _nn_descent_graph_build(
                 ).alias("sim"),
             )
         )
-        pre = persistent_rdd_ids(spark)
-        edges = top_k_per_group(
-            edges.unionByName(fresh),
-            ["a_id"],
-            [F.col("sim").desc(), F.col("b_id").asc()],
-            build_degree,
-        ).drop("rn").localCheckpoint(eager=True)
-        new_ids = persistent_rdd_ids(spark) - pre
-        unpersist_ids(spark, gen_ids)  # round r-1's graph is dead
-        gen_ids = new_ids
+        edges = g.cut(
+            top_k_per_group(
+                edges.unionByName(fresh),
+                ["a_id"],
+                [F.col("sim").desc(), F.col("b_id").asc()],
+                build_degree,
+            ).drop("rn")
+        )
 
     # final cut: wide internal lists truncate to the requested degree
     return top_k_per_group(

@@ -11,6 +11,7 @@ import random
 import pytest
 
 from jane_spark.engine import onetask
+from jane_spark.engine.ckpt import persistent_rdd_ids
 from jane_spark.operators import bpe
 from jane_spark.operators import pagerank as pr
 from tests.test_bpe import py_train_bpe
@@ -124,19 +125,23 @@ def test_pagerank_paths_identical_on_negative_and_null_weights(
     ids=["zero_out_weight", "int64_overflow"],
 )
 def test_pagerank_paths_raise_alike(spark, monkeypatch, rows, error):
+    """Both paths raise the same error and leave no checkpoint behind."""
     edges = spark.createDataFrame(rows, "src string, dst string, w bigint")
     calls = []
     real = pr._ranks_in_one_task
     monkeypatch.setattr(
         pr, "_ranks_in_one_task", lambda *a: calls.append(1) or real(*a)
     )
+    base = persistent_rdd_ids(spark)
     with pytest.raises(Exception, match=error):
         pr.pagerank(edges, weight="w")
     assert calls == [1]
+    assert persistent_rdd_ids(spark) == base
     _distributed(monkeypatch)
     with pytest.raises(Exception, match=error):
         pr.pagerank(edges, weight="w")
     assert calls == [1]
+    assert persistent_rdd_ids(spark) == base
 
 
 def test_pagerank_paths_identical_without_ansi(spark, monkeypatch):

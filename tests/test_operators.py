@@ -1108,17 +1108,23 @@ def test_connected_components_star_fallback_deep_chain(spark):
     assert got == expect
 
 
-def test_iterative_builds_bound_persistent_footprint(spark):
+@pytest.mark.parametrize("max_rows", [None, 0], ids=["default", "max_rows_0"])
+def test_iterative_builds_bound_persistent_footprint(spark, monkeypatch, max_rows):
     """r15 hygiene: fixpoint/training loops must unpersist dead
     checkpoint generations — repeated builds in one session may not
     accumulate persistent RDDs (the bench/driver session pollution
     that tripled late-suite warm execs), and the survivors' results
-    must stay readable AFTER the dead generations were dropped."""
+    must stay readable AFTER the dead generations were dropped.
+    ``max_rows`` 0 sends pagerank and train_bpe down their distributed
+    loops."""
+    from jane_spark.engine import onetask
     from jane_spark.engine.ckpt import persistent_rdd_ids
     from jane_spark.operators.components import connected_components
     from jane_spark.operators.pagerank import pagerank
-    from jane_spark.operators.bpe import train_bpe
+    from jane_spark.operators.bpe import train_bpe, train_unigram
 
+    if max_rows is not None:
+        monkeypatch.setattr(onetask, "MAX_ROWS", max_rows)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 30)], ["id_a", "id_b"]
     )
@@ -1129,8 +1135,12 @@ def test_iterative_builds_bound_persistent_footprint(spark):
     base = persistent_rdd_ids(spark)
     footprints = []
     for _ in range(3):
-        cc = connected_components(edges)
+        # a 5-node chain converges by propagation; the 30-node chain
+        # exceeds max_iter and takes the star fallback
+        cc = connected_components(edges.filter(F.col("id_a") < 5))
         assert {r["comp"] for r in cc.collect()} == {1}
+        star = connected_components(edges, max_iter=5)
+        assert {r["comp"] for r in star.collect()} == {1}
         pr = pagerank(
             edges.select(
                 F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -1139,10 +1149,12 @@ def test_iterative_builds_bound_persistent_footprint(spark):
         )
         assert pr.count() == 30
         assert len(train_bpe(docs, n_merges=4)) == 4
+        assert train_unigram(docs, n_iters=1)
         footprints.append(len(persistent_rdd_ids(spark) - base))
     # per build only the RETURNED generations may survive (CC's final
-    # labels, pagerank's final ranks; train_bpe returns a driver list
-    # and leaks nothing) — without the r15 cleanup each build left
+    # labels, the star fallback's last labels and star edges,
+    # pagerank's final ranks; train_bpe and train_unigram return driver
+    # lists and leak nothing) — without the r15 cleanup each build left
     # ~16 dead generations (every round's table + scaffolding)
     assert footprints[0] <= 4, footprints
     assert footprints[2] - footprints[1] <= 4, footprints
