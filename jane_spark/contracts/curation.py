@@ -2107,11 +2107,14 @@ def q_k23_pq(spark, sf_dir):
     "q_k16_kmeans",
     oracle=_kmeans_oracle_sql(),
     survey_rows="K3,K8",
-    doc="deterministic distributed k-means assignment over the "
+    doc="deterministic k-means assignment over the "
     "embedding column (operators.semdedup.kmeans_assign): centroids "
     "seeded from the k smallest ids, 5 fixed Lloyd's iterations, "
-    "ties toward the smaller centroid id — broadcast k-by-d centroid "
-    "table per iteration, one k-by-d-keyed shuffle for the update; "
+    "ties toward the smaller centroid id — the loop runs in one Arrow "
+    "task when the vectors fit one (engine.onetask), else as one "
+    "k-by-d-keyed shuffle per iteration against k-by-d centroid "
+    "literals; the assignment is one SQL projection against the "
+    "fitted centroids; "
     "oracle = the Lloyd loop UNROLLED into chained SQL CTEs (fixed "
     "iteration count makes it one-shot-expressible after all, r7); "
     "byte-identical across runs and partitionings (pytest pins the "

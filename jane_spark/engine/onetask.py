@@ -1,15 +1,15 @@
 """When a materialized table is small enough to run an operator's whole
 loop in one task.
 
-The fixed-count loops (PageRank rounds, BPE merges) are written as
-one Spark job chain per round, because that is the only shape that
-runs on graphs and vocabularies too large for one task. When the
-table the loop reads is small, the loop's time is the per-round job
-and scheduling floor, not compute: 46 jobs and 7 s to rank a graph of
-a few hundred edges (the mmr reranker's r11 lesson, and the COST
-argument, McSherry et al. 2015). Such tables run the same loop inside
-one Arrow task instead; the operators keep the distributed loop for
-everything else and for parity tests.
+The fixed-count loops (PageRank rounds, BPE merges, Lloyd rounds)
+are written as one Spark job chain per round, because that is the
+only shape that runs on graphs, vocabularies and corpora too large
+for one task. When the table the loop reads is small, the loop's time
+is the per-round job and scheduling floor, not compute: 46 jobs and
+7 s to rank a graph of a few hundred edges (the mmr reranker's r11
+lesson, and the COST argument, McSherry et al. 2015). Such tables run
+the same loop inside one Arrow task instead; the operators keep the
+distributed loop for everything else and for parity tests.
 
 The bound is measured, not derived. On a 4-core box (local[4], 8
 shuffle partitions, warm session), ``pagerank(iters=5)`` and
@@ -38,21 +38,58 @@ bound depends on no join or broadcast setting. The row count is exact
 up to the bound; the optimizer's size estimate is ``Long.MAX_VALUE``
 for every ``createDataFrame`` input and so cannot tell a ten-edge
 graph from a large one.
+
+A k-means task holds rows × dim doubles, so rows alone do not bound
+it: 250k rows of 768-dim embeddings are 192M cells, gigabytes in one
+worker. ``kmeans_fit(k=8, iters=5)`` on random ``array<float>``
+vectors, same box and session, timed on each path:
+
+==============  ============  ============  ==============
+rows x dim      cells         one task (s)  distributed (s)
+==============  ============  ============  ==============
+20k x 64        1.3M          1.2-2.3       5.3-8.2
+60k x 64        3.8M          2.3-2.6       8.6-8.8
+15k x 256       3.8M          2.3-2.5       9.6-10.0
+250k x 16       4.0M          2.8-3.2       8.8-10.4
+150k x 64       9.6M          6.4-6.7       18.6-19.7
+40k x 256       10.2M         6.1-6.4       19.7-21.3
+250k x 64       16.0M         11.7          31.7
+100k x 256      25.6M         17.3          43.2
+==============  ============  ============  ==============
+
+The one task still won at the largest size tried, by a margin that
+narrows with size (about 4x at 4M cells, 2.5x at 25.6M), and its
+memory grows with it: the Arrow batches, the combined column, the
+id-sorted matrix and the distance blocks hold about five copies of
+the cells. ``MAX_CELLS`` is 4M cells: there the one task is 3-4x
+faster, a margin a distributed loop on three times the cores would
+not close, and the task holds about 150 MB. Below 16 dimensions
+``MAX_ROWS`` is the tighter bound.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 MAX_ROWS = 250_000
+MAX_CELLS = 4_000_000
 
 
-def one_task_rows(df: DataFrame) -> int | None:
+def one_task_rows(df: DataFrame, cells: Column | None = None) -> int | None:
     """Row count of ``df`` when it is at most ``MAX_ROWS``, else None.
     ``df`` should already be materialized: the count is an action (it
-    stops reading after ``MAX_ROWS + 1`` rows)."""
-    rows = df.limit(MAX_ROWS + 1).count()
-    return rows if rows <= MAX_ROWS else None
+    stops reading after ``MAX_ROWS + 1`` rows). ``cells``, a per-row
+    element count such as an array's size, also bounds the table's
+    total elements by ``MAX_CELLS`` (same one action)."""
+    head = df.limit(MAX_ROWS + 1)
+    if cells is None:
+        rows, total = head.count(), 0
+    else:
+        rows, total = head.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum(cells), F.lit(0))
+        ).first()
+    return rows if rows <= MAX_ROWS and total <= MAX_CELLS else None
 
 
 def ansi_enabled(df: DataFrame) -> bool:

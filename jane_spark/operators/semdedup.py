@@ -9,11 +9,11 @@ quadratics, which is what makes semantic dedup feasible at 100 TB.
 
 Two pieces, composable:
 
-- ``kmeans_assign`` — a deterministic distributed Lloyd's iteration
-  built from DataFrame aggregations (no MLlib dependency, no RNG:
-  centroids initialize from the k smallest-id vectors and ties break
-  toward the smaller centroid id, so the assignment is reproducible
-  across runs and cluster sizes).
+- ``kmeans_assign`` / ``kmeans_fit`` — a deterministic Lloyd's
+  iteration (no MLlib dependency, no RNG: centroids initialize from
+  the k smallest-id vectors, ties break toward the smaller centroid
+  id, and each update rounds the mean to 9 dp, so the assignment is
+  reproducible across runs and cluster sizes).
 - ``semantic_dedup`` — within given clusters, a document is a
   duplicate iff some SMALLER-id member of its cluster has cosine
   similarity >= threshold (greedy keep-first in id order — the
@@ -22,13 +22,34 @@ Two pieces, composable:
 
 Cluster assignment can come from ``kmeans_assign`` or from any
 existing label column — the dedup stage is agnostic.
+
+Two Lloyd loops, one result. The distributed loop is one seed collect
+plus one collect per round (~11 driver-scheduled jobs for 5 rounds)
+whatever the corpus size. So when the vectors fit one task
+(``engine.onetask.one_task_rows``: at most ``MAX_ROWS`` rows and
+``MAX_CELLS`` elements, bounds set from measured timings of both
+paths), ``coalesce(1).mapInArrow`` runs the seeding and every round
+in one Python task (:func:`_lloyd`) with the SQL loop's arithmetic:
+the left-folded squared-L2, the smaller-id tie-break, and Spark's
+HALF_UP ``round(avg, 9)``. Only the k×d centroids come back; the
+assignment either path returns is the same lazy SQL projection
+against them. Larger tables, ids whose Python order is not Spark's,
+and inputs the twin cannot reproduce exactly (NULL vectors or
+elements, NaN, infinities, ragged lengths, tied seed ids) keep the
+distributed loop, which is also the reference for the parity tests.
 """
 
 from __future__ import annotations
 
+import decimal
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
+from jane_spark.engine.onetask import one_task_rows
 from jane_spark.functions.arrays import cosine_from_norms, norm
 
 
@@ -69,50 +90,72 @@ def _kmeans_loop(
     iters: int,
 ) -> "tuple[DataFrame, list[list[float]]]":
     """Deterministic Lloyd's k-means over an ``array<float>`` column;
-    returns ``(id, cluster)``.
+    returns ``(id, cluster)`` and the fitted centroids.
 
-    Distributed shape per iteration: assignment is a broadcast of the
-    k×d centroid table (tiny) against every row — a narrow map; the
-    update is posexplode → groupBy(cluster, dim) mean → rebuild, i.e.
-    ONE shuffle whose key cardinality is k×d, independent of corpus
-    size. ``iters`` is fixed (no convergence test) so the plan depth is
-    static and the result reproducible.
-
-    Driver memory holds only the k×d centroid matrix between
-    iterations — the same bounded footprint as IVF training
-    (operators/vector.py train_ivf_centroids).
+    The centroids come from one of two loops with one result (module
+    docstring): :func:`_centroids_in_one_task` when the vectors fit one
+    task, else :func:`_centroids_distributed`. Either way the returned
+    assignment is the same lazy SQL projection against the final
+    centroid literals, so its plan does not depend on the path.
     """
+    if k < 1:
+        raise ValueError("k must be >= 1")
     vecs = df.select(
         F.col(id_col).alias("__id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
     )
-    # deterministic seeding: the k smallest ids' vectors
-    seed_rows = (
-        vecs.orderBy("__id").limit(k).select("__id", "__v").collect()
+    id_t = vecs.schema["__id"].dataType
+    # seeding orders by id: only ids whose Python order is Spark's.
+    # The gate reads the unmaterialized input once more, where the
+    # distributed loop reads it iters + 1 times.
+    rows = (
+        one_task_rows(vecs, F.greatest(F.size("__v"), F.lit(0)))
+        if isinstance(id_t, IntegralType) or id_t == StringType()
+        else None
     )
-    centroids = [(i, list(r["__v"])) for i, r in enumerate(seed_rows)]
+    centroids = _centroids_in_one_task(vecs, k, iters) if rows else None
+    if centroids is None and rows != 0:  # rows == 0: nothing to seed
+        centroids = _centroids_distributed(vecs, k, iters)
+    if not centroids:
+        raise ValueError("vector table is empty: nothing to cluster")
+    assigned = _assign(vecs, centroids).select(
+        F.col("__id").alias(id_col), F.col("cluster").cast("int").alias("cluster")
+    )
+    return assigned, centroids
 
-    def assign(cdf: list[tuple[int, list[float]]]) -> DataFrame:
-        # argmin squared-L2 with ties toward the smaller centroid id:
-        # array_min over (dist, cid) structs compares lexicographically.
-        # The whole expression is ONE SQL string (see _sql_double): the
-        # k×d centroid literals are the same IEEE doubles F.lit would
-        # produce, without the ~1.4 s/round of py4j element calls.
-        carr = ",".join(
-            "named_struct('cid', %d, 'cv', array(%s))"
-            % (cid, ",".join(_sql_double(float(x)) for x in cv))
-            for cid, cv in cdf
-        )
-        dists = (
-            f"array_min(transform(array({carr}), c -> named_struct("
-            "'dist', aggregate(zip_with(__v, c.cv, (a, b) -> "
-            "(a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
-            "(acc, x) -> acc + x), 'cid', c.cid))).cid"
-        )
-        return vecs.withColumn("cluster", F.expr(dists))
 
+def _assign(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """``vecs`` plus ``cluster``: the argmin squared-L2 centroid with
+    ties toward the smaller centroid id (array_min over (dist, cid)
+    structs compares lexicographically). The whole expression is ONE
+    SQL string (see _sql_double): the k×d centroid literals are the
+    same IEEE doubles F.lit would produce, without the ~1.4 s/round of
+    py4j element calls."""
+    carr = ",".join(
+        "named_struct('cid', %d, 'cv', array(%s))"
+        % (cid, ",".join(_sql_double(float(x)) for x in cv))
+        for cid, cv in enumerate(centroids)
+    )
+    dists = (
+        f"array_min(transform(array({carr}), c -> named_struct("
+        "'dist', aggregate(zip_with(__v, c.cv, (a, b) -> "
+        "(a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
+        "(acc, x) -> acc + x), 'cid', c.cid))).cid"
+    )
+    return vecs.withColumn("cluster", F.expr(dists))
+
+
+def _centroids_distributed(
+    vecs: DataFrame, k: int, iters: int
+) -> list[list[float]]:
+    """The Lloyd loop as Spark jobs: one seed collect, then per round
+    the assignment (a narrow map against the centroid literals) and
+    ONE shuffle whose key cardinality is k×d, independent of corpus
+    size."""
+    # deterministic seeding: the k smallest ids' vectors
+    seed_rows = vecs.orderBy("__id").limit(k).select("__v").collect()
+    centroids = [list(r["__v"]) for r in seed_rows]
     for _ in range(iters):
-        assigned = assign(centroids)
         # round the mean to 9 dp: double addition is order-dependent
         # under shuffle, and an unrounded ulp wobble in a centroid could
         # flip a near-tie assignment between runs/partitionings.
@@ -123,7 +166,8 @@ def _kmeans_loop(
         # guide §2.4 remove shuffles outright — one stage fewer per
         # Lloyd round, same avg + round arithmetic, values identical).
         means = (
-            assigned.select("cluster", F.posexplode("__v").alias("dim", "val"))
+            _assign(vecs, centroids)
+            .select("cluster", F.posexplode("__v").alias("dim", "val"))
             .groupBy("cluster", "dim")
             .agg(F.round(F.avg("val"), 9).alias("m"))
             .collect()
@@ -137,15 +181,119 @@ def _kmeans_loop(
         # (ADVICE r15 — fixed-dim inputs are unaffected: every cell is
         # present and the .get never falls back)
         centroids = [
-            (cid, [cells[cid].get(d, cv[d]) for d in range(len(cv))])
-            if cid in cells else (cid, cv)
-            for cid, cv in centroids
+            [cells[cid].get(d, cv[d]) for d in range(len(cv))]
+            if cid in cells else cv
+            for cid, cv in enumerate(centroids)
         ]
+    return centroids
 
-    assigned = assign(centroids).select(
-        F.col("__id").alias(id_col), F.col("cluster").cast("int").alias("cluster")
-    )
-    return assigned, [cv for _, cv in centroids]
+
+def _centroids_in_one_task(
+    vecs: DataFrame, k: int, iters: int
+) -> "list[list[float]] | None":
+    """:func:`_lloyd` over the whole ``(__id, __v)`` table in one Arrow
+    task; None when the table holds an input it cannot reproduce."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def run(batches):
+        ids, vs = [], []
+        for b in batches:
+            ids.append(b.column("__id"))
+            vs.append(b.column("__v"))
+        if not vs:
+            return
+        v = pa.chunked_array(vs).combine_chunks()
+        if not len(v):
+            return
+        lens = pc.list_value_length(v).to_numpy(zero_copy_only=False)
+        flat = v.flatten()
+        if v.null_count or flat.null_count or (lens != lens[0]).any():
+            return  # null vectors, null elements or ragged lengths
+        cents = _lloyd(
+            pa.chunked_array(ids).to_pylist(),
+            flat.to_numpy(zero_copy_only=False).reshape(len(v), lens[0]),
+            k,
+            iters,
+        )
+        if cents is not None:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cents, pa.list_(pa.float64()))], names=["cv"]
+            )
+
+    got = vecs.coalesce(1).mapInArrow(run, "cv array<double>").collect()
+    return [list(r["cv"]) for r in got] if got else None
+
+
+_ROUND_CTX = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)
+_NINE_DP = decimal.Decimal("1e-9")
+
+
+def _round9(x: float) -> float:
+    """Spark's ``round(x, 9)`` on a double: HALF_UP on the decimal
+    string of ``x`` (``BigDecimal.valueOf``), back to the nearest
+    double; ``+ 0.0`` because a BigDecimal has no negative zero.
+    ``repr`` is the shortest round-tripping string, which is what
+    ``Double.toString`` prints from JDK 19 on; older JDKs occasionally
+    print a longer string for the same double."""
+    if not math.isfinite(x):
+        return x
+    d = decimal.Decimal(repr(x)).quantize(_NINE_DP, context=_ROUND_CTX)
+    return float(d) + 0.0
+
+
+def _lloyd(
+    ids: list, x: np.ndarray, k: int, iters: int
+) -> "list[list[float]] | None":
+    """:func:`_centroids_distributed` on an ``n × d`` double matrix
+    (row ``i`` is the vector of ``ids[i]``), or None when it cannot be
+    reproduced exactly: a NULL id (Spark sorts it first), a tie among
+    the k + 1 smallest ids (the seed choice is then Spark's), or a
+    non-finite element (NaN and ±inf compare differently in SQL and
+    NumPy).
+
+    Every step is the SQL loop's arithmetic: squared L2 as the left
+    fold ``acc + (a - b) * (a - b)`` from 0.0 in dimension order
+    (vectorized over rows, one dimension at a time — never a pairwise
+    ``np.sum``), the first minimum (the smaller centroid id) on ties,
+    and per-(cluster, dim) ``sum / count`` rounded by :func:`_round9`.
+    The sums run in id order; the shuffle's order may differ, which
+    the 9 dp rounding absorbs unless a mean lies within a few ulps of
+    a rounding boundary (the reason the SQL loop rounds)."""
+    if any(i is None for i in ids) or not np.isfinite(x).all():
+        return None
+    order = sorted(range(len(ids)), key=ids.__getitem__)
+    head = [ids[i] for i in order[: k + 1]]
+    if any(a == b for a, b in zip(head, head[1:])):
+        return None
+    x = x[order]
+    n, d = x.shape
+    cents = x[:k].copy()
+    # row blocks bound the n × k distance matrix
+    block = max(1, (1 << 20) // len(cents))
+    for _ in range(iters):
+        labels = np.concatenate(
+            [
+                _nearest(x[lo : lo + block], cents)
+                for lo in range(0, n, block)
+            ]
+        )
+        counts = np.bincount(labels, minlength=len(cents))
+        for j in range(d):
+            # bincount adds each bin's weights in row order
+            sums = np.bincount(labels, weights=x[:, j], minlength=len(cents))
+            for c in np.flatnonzero(counts):
+                cents[c, j] = _round9(float(sums[c] / counts[c]))
+    return cents.tolist()
+
+
+def _nearest(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid (the first on ties)."""
+    dist = np.zeros((len(x), len(cents)))
+    for j in range(x.shape[1]):
+        diff = x[:, j, None] - cents[None, :, j]
+        dist = dist + diff * diff
+    return dist.argmin(axis=1)
 
 
 def kmeans_assign(

@@ -32,7 +32,6 @@ bucket-pruned candidate set. See docs/SCALE.md §6 for the ladder.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -863,9 +862,10 @@ def pq_encode(
     config stores 16 bytes per vector, a 32× memory cut for the
     re-rank working set).
 
-    Contract shape: one Lloyd loop per subvector (broadcast k×(d/m)
-    centroids, one keyed shuffle per iteration) + ``m-1`` id-equi
-    joins to assemble the tuple. At scale the joins disappear: train
+    Contract shape: one Lloyd loop per subvector (one Arrow task when
+    the slice fits one task, else k×(d/m) centroid literals and one
+    keyed shuffle per iteration) + ``m-1`` id-equi joins to assemble
+    the tuple. At scale the joins disappear: train
     the m codebooks, then ONE projection computes every code against
     the broadcast codebook literals. Codes are integers end to end —
     no float boundary can flip a hash comparison."""
@@ -902,15 +902,16 @@ def pq_fit(
         return kmeans_fit(sub, id_col, "__sub", k=k, iters=iters)[1]
 
     # the m subspace fits are INDEPENDENT driver-action chains (each
-    # is its own Lloyd loop over a disjoint slice of the vector) — run
-    # them from a small thread pool so their per-round jobs overlap
-    # and back-fill executors (guide §2.6) instead of serializing
-    # m×(iters+1) tiny collects on the driver. Arithmetic per subspace
-    # is UNCHANGED (same plans, same collects, same order within each
-    # chain), so codes and codebooks are bit-identical to the
-    # sequential build.
-    workers = int(os.environ.get("SPARK_GRAFT_FIT_THREADS", "4"))
-    with ThreadPoolExecutor(max_workers=max(1, min(m, workers))) as pool:
+    # is its own Lloyd loop over a disjoint slice of the vector: a gate
+    # count and one task when the slice fits one task, else a seed
+    # collect and one collect per round) — run them from a thread pool
+    # as wide as the executor slots so their jobs overlap and
+    # back-fill executors (guide §2.6) instead of serializing on the
+    # driver. Arithmetic per subspace is UNCHANGED (same plans, same
+    # collects, same order within each chain), so codes and codebooks
+    # are bit-identical to the sequential build.
+    slots = vectors.sparkSession.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=max(1, min(m, slots))) as pool:
         books = list(pool.map(fit, range(m)))
 
     # codes: ONE projection computing every subspace's argmin against
@@ -1127,20 +1128,21 @@ def ivf_pq_topk(
     an external query set just swaps the probe side."""
     from jane_spark.operators.semdedup import kmeans_fit
 
-    # one checkpoint feeds EVERY consumer (coarse Lloyd collects, the
-    # GEMM probe pass, the m-subspace PQ training collects, the
-    # per-query ADC tables): without it each of those ~15 jobs re-runs
-    # the scan+cast lineage — the same multi-consumer training-input
-    # rule the residual path applies (guide §5; the 6c40351 A/B class:
-    # 12+ amortizing consumers). Lazy when kmeans_fit runs first (its
-    # single-threaded seed collect materializes the mark); EAGER on
-    # the ``centroids=...`` path, where the first consumers are
-    # pq_fit's CONCURRENT subspace fits — lazy there would race
-    # threads into duplicated materialization (the 6c40351 mode;
-    # ADVICE r15). Retention: the returned plan references the
-    # ``assigned`` checkpoint derived from this one; both persist for
-    # the session unless the caller unpersists after materializing
-    # (bench.py's between-row hygiene does).
+    # one checkpoint feeds EVERY consumer (coarse Lloyd jobs, the
+    # GEMM probe pass, the m-subspace PQ training jobs, the per-query
+    # ADC tables): without it each of those jobs re-runs the scan+cast
+    # lineage — the same multi-consumer training-input rule the
+    # residual path applies (guide §5; the 6c40351 A/B class: 12+
+    # amortizing consumers). Lazy when kmeans_fit runs first (its
+    # one-task gate count, a single-threaded action on either Lloyd
+    # path, materializes the mark); EAGER on the ``centroids=...``
+    # path, where the first consumers are pq_fit's CONCURRENT subspace
+    # fits — lazy there would race threads into duplicated
+    # materialization (the 6c40351 mode; ADVICE r15). Retention: the
+    # returned plan references the ``assigned`` checkpoint derived
+    # from this one; both persist for the session unless the caller
+    # unpersists after materializing (bench.py's between-row hygiene
+    # does).
     vectors = vectors.localCheckpoint(eager=centroids is not None)
     if centroids is None:
         _assign, cents = kmeans_fit(
@@ -1288,10 +1290,10 @@ def ivf_pq_residual_topk(
             lambda a, b: a - b,
         ).alias("__res"),
     )
-    # checkpoint the residuals: the m-subspace PQ trainer collects
-    # (seeds + per-iteration means) re-execute their input lineage per
-    # job — scan → GEMM assign → project — 12× without the cut (guide
-    # §5, localCheckpoint to truncate lineage; r15). Values unchanged.
+    # checkpoint the residuals: the m-subspace PQ trainer jobs (gate
+    # counts and fits) re-execute their input lineage per job — scan →
+    # GEMM assign → project — without the cut (guide §5,
+    # localCheckpoint to truncate lineage; r15). Values unchanged.
     residuals = residuals.localCheckpoint(eager=False)
     codes, books = pq_fit(
         residuals, id_col, "__res", dim, m, k, pq_iters

@@ -1,19 +1,21 @@
-"""PageRank and BPE training each have two paths: a table that fits one
-task (engine.onetask) runs the whole loop in one Arrow task, a larger
-one keeps the distributed loop. Each test forces both paths through
-``onetask.MAX_ROWS`` (its value vs 0), checks which one ran, and
-requires identical results."""
+"""PageRank, BPE training and the k-means Lloyd loop each have two
+paths: a table that fits one task (engine.onetask) runs the whole loop
+in one Arrow task, a larger one keeps the distributed loop. Each test
+forces both paths through ``onetask.MAX_ROWS`` (its value vs 0), checks
+which one ran, and requires identical results."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 
 from jane_spark.engine import onetask
 from jane_spark.engine.ckpt import persistent_rdd_ids
 from jane_spark.operators import bpe
 from jane_spark.operators import pagerank as pr
+from jane_spark.operators import semdedup as sd
 from tests.test_bpe import py_train_bpe
 
 
@@ -239,3 +241,188 @@ def test_train_bpe_paths_identical_and_match_twin(
         assert 0 < len(want) < 30
     # non-BMP characters stay whole symbols
     assert any(ch in m[0] + m[1] for m in want for ch in ("😀", "𝔸", "é"))
+
+
+# -------------------------------------------------------------- k-means
+
+
+def _fit_both_paths(spark, monkeypatch, rows, schema, k, iters):
+    """``kmeans_fit`` on each path: (centroids as exact bit patterns,
+    sorted assignment) per path."""
+    df = spark.createDataFrame(rows, schema)
+
+    def run():
+        assign, cents = sd.kmeans_fit(df, "id", "v", k=k, iters=iters)
+        bits = [[float(x).hex() for x in cv] for cv in cents]
+        return bits, sorted(tuple(r) for r in assign.collect())
+
+    return _both_paths(monkeypatch, sd, "_centroids_in_one_task", run)
+
+
+@pytest.mark.parametrize(
+    "n, dim, k, iters",
+    [(60, 5, 4, 0), (60, 5, 4, 1), (90, 16, 7, 5), (25, 3, 3, 5)],
+)
+def test_kmeans_paths_identical_on_random_float32(
+    spark, monkeypatch, n, dim, k, iters
+):
+    rng = np.random.RandomState(n + dim + iters)
+    vecs = rng.randn(n, dim).astype(np.float32)
+    ids = rng.permutation(10 * n)[:n]  # unordered, gapped ids
+    rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id bigint, v array<float>", k, iters
+    )
+    assert one == dist
+    assert len(one[0]) == k and len(one[1]) == n
+    if iters == 0:  # the seeds: the k smallest ids' vectors, in id order
+        seeds = [r[1] for r in sorted(rows)[:k]]
+        assert one[0] == [[x.hex() for x in cv] for cv in seeds]
+
+
+def test_kmeans_paths_break_distance_ties_alike(spark, monkeypatch):
+    """[1, 0] is equidistant from the seeds [0, 0] and [2, 0]: both
+    paths give it to the smaller centroid id."""
+    rows = [(0, [0.0, 0.0]), (1, [2.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0])]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id int, v array<double>", 2, 1
+    )
+    assert one == dist
+    assert one[0] == [
+        [x.hex() for x in cv] for cv in ([0.666666667, 0.0], [2.0, 0.0])
+    ]
+
+
+def test_kmeans_paths_fold_distances_in_dimension_order(spark, monkeypatch):
+    """The two seeds hold the same coordinates in a different order, so
+    their distances to the zero vector differ only in summation order:
+    the left fold puts it nearer seed 1, a pairwise sum nearer seed 0."""
+    a = [0.549, 0.715, 0.603, 0.545, 0.424, 0.646, 0.438, 0.892,
+         0.964, 0.383, 0.792, 0.529, 0.568, 0.926, 0.071, 0.087]
+    b = [0.529, 0.892, 0.792, 0.424, 0.438, 0.568, 0.383, 0.715,
+         0.964, 0.926, 0.603, 0.071, 0.646, 0.087, 0.549, 0.545]
+    rows = [(0, a), (1, b), (2, [0.0] * 16)]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id long, v array<double>", 2, 1
+    )
+    assert one == dist
+    assert one[0][0] == [x.hex() for x in a]  # seed 0 kept no member
+    assert one[1] == [(0, 0), (1, 1), (2, 1)]
+
+
+def test_kmeans_paths_round_half_up_on_the_decimal_string(
+    spark, monkeypatch
+):
+    """Means at an exact 9 dp tie round away from zero (2**-10 is
+    0.0009765625), and a mean that rounds to zero is +0.0."""
+    t = 2.0**-10
+    rows = [
+        (0, [t, -t, 0.0]), (1, [5.0, 5.0, 5.0]),
+        (2, [t, -t, -3e-12]), (3, [5.0, 5.0, 5.0]),
+    ]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id long, v array<double>", 2, 2
+    )
+    assert one == dist
+    assert one[0][0] == [x.hex() for x in (0.000976563, -0.000976563, 0.0)]
+
+
+@pytest.mark.parametrize("k", [4, 9])
+def test_kmeans_paths_keep_empty_clusters_and_extra_k(spark, monkeypatch, k):
+    """Three seeds share [1, 1]: the first takes their points, the last
+    never gets a member and keeps its coordinates; k beyond the row
+    count fits one centroid per row."""
+    rows = [
+        (0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [4.0, 0.5]),
+        (3, [1.0, 1.0]), (4, [4.0, 0.5]), (5, [0.0, 3.0]),
+    ]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id long, v array<double>", k, 5
+    )
+    assert one == dist
+    assert len(one[0]) == min(k, len(rows))
+    assert one[0][3] == [x.hex() for x in (1.0, 1.0)]
+    assert 3 not in {c for _, c in one[1]}
+
+
+def test_kmeans_string_ids_seed_in_code_point_order(spark, monkeypatch):
+    rows = [("é", [0.0]), ("z", [1.0]), ("😀", [2.0]), ("a", [3.0])]
+    one, dist = _fit_both_paths(
+        spark, monkeypatch, rows, "id string, v array<float>", 2, 0
+    )
+    assert one == dist
+    assert one[0] == [[(3.0).hex()], [(1.0).hex()]]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, None)],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [None, 1.0])],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [float("nan"), 1.0])],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [float("-inf"), 1.0])],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [3.0])],
+        [(0, [1.0, 2.0]), (0, [3.0, 1.0]), (2, [0.5, 0.5])],
+        [(None, [1.0, 2.0]), (1, [3.0, 1.0]), (2, [0.5, 0.5])],
+    ],
+    ids=["null_vector", "null_element", "nan", "inf", "ragged",
+         "tied_seed_ids", "null_id"],
+)
+def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
+    spark, monkeypatch, rows
+):
+    """The one task gives up (no rows back) and the distributed loop
+    fits the centroids, as it does with ``MAX_ROWS = 0``. (With tied
+    seed ids the seed order is Spark's choice, so only the centroid
+    set is compared.)"""
+    calls = []
+    for fn in ("_centroids_in_one_task", "_centroids_distributed"):
+        real = getattr(sd, fn)
+
+        def spy(*a, _fn=fn, _real=real):
+            got = _real(*a)
+            calls.append((_fn, got is not None))
+            return got
+
+        monkeypatch.setattr(sd, fn, spy)
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+
+    def fit():
+        cents = sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1]
+        return sorted([float(x).hex() for x in cv] for cv in cents)
+
+    got = fit()
+    assert calls == [
+        ("_centroids_in_one_task", False), ("_centroids_distributed", True)
+    ]
+    _distributed(monkeypatch)
+    assert fit() == got
+    assert calls[2:] == [("_centroids_distributed", True)]
+
+
+def test_kmeans_wide_tables_and_empty_tables_skip_the_task(
+    spark, monkeypatch
+):
+    """More than ``MAX_CELLS`` vector elements keeps the distributed
+    loop at any row count; an empty table raises on either path."""
+    calls = []
+    real = sd._centroids_in_one_task
+    monkeypatch.setattr(
+        sd, "_centroids_in_one_task", lambda *a: calls.append(1) or real(*a)
+    )
+    df = spark.createDataFrame(
+        [(i, [float(i)] * 4) for i in range(5)], "id long, v array<double>"
+    )
+    monkeypatch.setattr(onetask, "MAX_CELLS", 19)
+    wide = sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1]
+    assert calls == []
+    monkeypatch.setattr(onetask, "MAX_CELLS", 20)
+    assert sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1] == wide
+    assert calls == [1]
+    empty = spark.createDataFrame([], "id long, v array<double>")
+    with pytest.raises(ValueError, match="empty"):
+        sd.kmeans_fit(empty, "id", "v", k=2, iters=2)
+    _distributed(monkeypatch)
+    with pytest.raises(ValueError, match="empty"):
+        sd.kmeans_fit(empty, "id", "v", k=2, iters=2)
+    assert calls == [1]

@@ -478,17 +478,23 @@ def test_no_python_eval_outside_allowlist(spark, sf_dir):
 
 
 def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
-    """PageRank and BPE training run their whole loop in one Arrow task
-    when the table fits one (engine.onetask): building these rows at
-    the test SF launches a handful of jobs, not one chain per round
-    (46, 46 and 20 with the distributed loops). Jobs are counted per
-    job group, as perfbench/curate.py counts them. The PageRank rows
-    return a checkpoint of the ranks, so their plans hold no Python
-    stage."""
+    """PageRank, BPE training and the k-means Lloyd loop run their whole
+    loop in one Arrow task when the table fits one (engine.onetask):
+    building these rows at the test SF launches a handful of jobs, not
+    one chain per round (46, 46, 20 and 11 with the distributed loops).
+    Jobs are counted per job group, as perfbench/curate.py counts them.
+    The PageRank rows return a checkpoint of the ranks and k-means a
+    SQL projection against the fitted centroids, so their plans hold
+    no Python stage."""
     from jane_spark.contracts import REGISTRY
 
     sc = spark.sparkContext
-    budget = {"q_k27_pagerank": 8, "q_k34_textrank": 8, "q_k22_bpe_train": 6}
+    budget = {
+        "q_k27_pagerank": 8,
+        "q_k34_textrank": 8,
+        "q_k22_bpe_train": 6,
+        "q_k16_kmeans": 4,
+    }
     jobs = {}
     for name in budget:
         group = f"job-budget-{name}"
