@@ -2,20 +2,29 @@
 """Bench harness: headline contract queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+    python bench.py                  # every row; writes docs/bench_last_full*.json
+    python bench.py pq_codes mmr     # those rows only; writes no file
+
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "n_rows": ..., "sf": ...,
+   "cpus": ..., "defaultParallelism": ...}
+and the full artifact (per-row build seconds and build jobs, warm-up
+seconds, spreads, ambient load) on stderr.
 
 Methodology (BASELINE.md): warm-session engine time. The session is
-started and warmed before timing; each query's DataFrame is prepared
-once (the analyzed-plan equivalent of a prepared statement — client-
-side py4j plan construction is a fixed cost that does not scale with
-data, and DuckDB's SQL parse is likewise sub-ms); the timed action is
+started and warmed, and every table read once, before timing. Each
+query's DataFrame is built once under a job group of its own (the
+analyzed-plan equivalent of a prepared statement — client-side py4j
+plan construction is a fixed cost that does not scale with data, and
+DuckDB's SQL parse is likewise sub-ms); the timed action is
 ``toPandas()`` — full execution + Arrow result materialization, the
-same semantics as DuckDB's ``fetchdf``. Min of N runs (the timeit
-convention — robust to ambient load on a shared box). Baseline
-numbers to beat are the DuckDB 1.0.0 medians in BASELINE.md; driver
-rule is ≤ 2× per BASELINE.json.
+same semantics as DuckDB's ``fetchdf``. A row whose build launched a
+Spark job did data work at build (training collects, checkpoints,
+files written), so its timed runs rebuild it (``Build.rebuild``).
+Min of N runs (the timeit convention — robust to ambient load on a
+shared box). Baseline numbers to beat are the DuckDB 1.0.0 medians in
+BASELINE.md; driver rule is ≤ 2× per BASELINE.json.
 """
 
 from __future__ import annotations
@@ -24,6 +33,11 @@ import json
 import os
 import sys
 import time
+import uuid
+from typing import TYPE_CHECKING, NamedTuple
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 # bench-name -> contract-query name (BASELINE.md rows, same order)
 BENCH_QUERIES = {
@@ -256,8 +270,8 @@ BENCH_QUERIES = {
     # synchronous LPA communities (lazy 4-round plan; unrolled-CTE twin)
     "lpa": "q_k52_lpa",
     # round 14: NN-descent kNN-graph build (localCheckpoint per round
-    # at plan build -> REBUILD_PER_RUN); the oracle replays seed + both
-    # refinement rounds, so it is a genuine twin
+    # at plan build); the oracle replays seed + both refinement rounds,
+    # so it is a genuine twin
     "nn_descent": "q_k48_nn_descent",
     # closed-form 2x2-block OPQ rotation (one lazy plan: aggregate +
     # broadcast cross join + codegen projection; genuine twin)
@@ -279,15 +293,14 @@ BENCH_QUERIES = {
     # the string_agg reassembly byte-for-byte)
     "span_removal": "q_t45_span_removal",
     # residual IVF-PQ / true IVFADC (coarse kmeans_fit + residual
-    # pq_fit collect at plan build -> REBUILD_PER_RUN, the ivf_pq
-    # class; genuine twin — residual-sourced unrolled-Lloyd chains)
+    # pq_fit collect at plan build; genuine twin — residual-sourced
+    # unrolled-Lloyd chains)
     "ivf_pq_residual": "q_k23_ivf_pq_residual",
     # incremental LPA (lazy plan end to end — the stored 4-round
     # fixpoint, admission and refinement are one plan; genuine twin)
     "lpa_incr": "q_k52_lpa_incr",
     # Avro container quarantine (container files written at plan
-    # build -> REBUILD_PER_RUN, the jsonl/csv/orc_roundtrip class;
-    # arithmetic good/corrupt twin)
+    # build; arithmetic good/corrupt twin)
     "avro_quarantine": "q_a17_avro",
     # content-defined chunking (lazy plan; genuine twin — the oracle
     # replays fingerprint cuts, lead segmentation and chunk md5s)
@@ -297,71 +310,7 @@ BENCH_QUERIES = {
     # is the batch twin — a construct-only compare)
 }
 
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-
-# Queries whose work happens at DataFrame-BUILD time (driver-side
-# iteration with bounded collects — BPE training): the build must sit
-# INSIDE the timed region or the row would time only the final tiny
-# materialization.
-# r10 audit: every operator whose training/fixpoint/bitmap work runs
-# at build (driver loops with bounded collects) was being timed as its
-# final checkpoint read only — 0.02 s rows hiding multi-second builds.
-# All of them now rebuild inside the timed region, per this file's own
-# documented rule. (Pure-lazy plans like semdedup stay prepared-once:
-# their re-runs reuse shuffle outputs, which is ordinary warm-session
-# Spark behavior, not hidden build work.)
-REBUILD_PER_RUN = {
-    "xml_quarantine",
-    "orc_roundtrip",
-    "bpe_train",
-    "sq_topk",
-    "cascade",
-    "csv_quarantine",
-    "waterfill",
-    "unigram_train",
-    "pagerank",
-    "textrank",
-    "dbscan",
-    "keep_best",
-    "ivf_pq",
-    "bloom_dedup",
-    "mmr",
-    "jsonl_quarantine",
-    # drift matrices eagerly localCheckpoint their (source, value)
-    # count table at plan-BUILD — rebuild per run or the timed region
-    # excludes the only data-sized stage (r12 review)
-    "drift",
-    "ks_drift",
-    # hive-export roundtrip writes its files at plan build (the
-    # orc_roundtrip shape)
-    "export_roundtrip",
-    # the OPQ/dimperm fits collect their statistics row (pca gram /
-    # per-dim variances) at plan build — rebuild or the timed region
-    # excludes the training scan
-    "dimperm_pq",
-    "opq_codes",
-    # incremental-IVF trains its frozen quantizer (kmeans_fit collect)
-    # at plan build
-    "ivf_incr",
-    # the layout-key operators collect their min/max bounds aggregate
-    # at plan build (a full column scan) — rebuild or the timed region
-    # excludes it. zorder is re-classed here too (r13 honesty pass: it
-    # predates the REBUILD rule and its old number excluded the scan)
-    "hilbert",
-    "zorder",
-    # NN-descent localCheckpoints its edge table per refinement round
-    # at plan build (the LPA loop discipline) — rebuild or the timed
-    # region excludes the whole construction (r14, the zorder lesson
-    # applied in the same commit per VERDICT r13 #8)
-    "nn_descent",
-    # residual IVF-PQ trains coarse kmeans + residual PQ codebooks at
-    # plan build (collects) — the ivf_pq class, added in the same
-    # commit that introduced the operator (the r13 standing rule)
-    "ivf_pq_residual",
-    # the Avro fixture containers are written at plan build (the
-    # jsonl/csv/orc_roundtrip class)
-    "avro_quarantine",
-}
+RUNS = 5
 
 # Ambient-drift calibration (VERDICT r4 "bench hygiene"): re-measure a
 # few DuckDB baseline rows in the SAME session, interleaved with the
@@ -605,9 +554,8 @@ CALIBRATION = {
 # if it never clears, the row is tagged in queries_ambient so a later
 # reader can discount it — ambient contamination can no longer
 # masquerade as a plan regression.
-_HZ = os.sysconf(os.sysconf_names["SC_CLK_TCK"])
 _NCPU = os.cpu_count() or 1
-AMBIENT_GATE_CORES = float(os.environ.get("SPARK_GRAFT_AMBIENT_GATE", "1.5"))
+AMBIENT_GATE_CORES = 1.5
 # HOST STEAL gets its OWN, stricter gate (VERDICT r13 "what's wrong
 # #1"): steal of 0.6-1.1 cores slid under the 1.5 combined gate and
 # still inflated pagerank/cascade/keep_best/sq_topk by 0.3-5 s — steal
@@ -616,7 +564,7 @@ AMBIENT_GATE_CORES = float(os.environ.get("SPARK_GRAFT_AMBIENT_GATE", "1.5"))
 # contaminated reading. A row whose window saw steal above this gate
 # re-measures like an ambient hit and, if it never clears, is tagged
 # in queries_steal.
-STEAL_GATE_CORES = float(os.environ.get("SPARK_GRAFT_STEAL_GATE", "0.5"))
+STEAL_GATE_CORES = 0.5
 
 
 def _proc_stat() -> tuple[int, int, int]:
@@ -708,30 +656,24 @@ def _ambient_cores(start: tuple[float, int, int, int, int],
     )
 
 
-def _wait_for_ambient_clear(
-    gate: float, steal_gate: float | None = None, max_wait: float = 20.0
-) -> bool:
-    if steal_gate is None:
-        steal_gate = STEAL_GATE_CORES
+def _wait_for_ambient_clear(max_wait: float = 20.0) -> None:
     waited = 0.0
     while waited < max_wait:
         probe = _ambient_start()
         time.sleep(0.5)
         waited += 0.5
         user, steal = _ambient_cores(probe, min_window=0.5)
-        if user <= gate and steal <= steal_gate:
-            return True
-    return False
+        if user <= AMBIENT_GATE_CORES and steal <= STEAL_GATE_CORES:
+            return
 
 
 def _duckdb_connect(sf_dir: str):
     import duckdb
 
+    from jane_spark.engine.catalog import TABLES
+
     con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * "
             f"FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -751,12 +693,10 @@ def _time_duckdb(con, sql: str, runs: int = 3) -> float:
     return round(statistics.median(samples), 4)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from jane_spark.contracts import REGISTRY
+def start_session(sf_dir: str, app: str = "jane_spark_bench") -> SparkSession:
+    """The bench session: executors warmed, the hot tables pinned and
+    every contract table read once, all before any row is built."""
+    from jane_spark.engine.catalog import Catalog
     from jane_spark.engine.session import get_spark
 
     # shuffle partitions sized to the benchmark data volume (sf0.1 is
@@ -764,8 +704,8 @@ def main() -> None:
     # AQE stays ON (the at-scale posture), it would coalesce these
     # anyway; this just skips scheduling empty tasks.
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
-    spark = get_spark("jane_spark_bench")
-    # warm the executors + parquet footers outside the timed region
+    spark = get_spark(app)
+    # warm the executors outside the timed region
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     # Pin hot tables in the columnar cache, clustered on their primary
@@ -776,8 +716,6 @@ def main() -> None:
     # Catalog.clustered. Scan-bound queries keep the vectorized parquet
     # path — it beats cached-batch decode. DuckDB's baseline likewise
     # re-reads OS-page-cached parquet with a warm buffer pool.
-    from jane_spark.engine.catalog import Catalog
-
     cat = Catalog(spark, sf_dir)
     cat.pin("events", cluster_by="user_id", partitions=8)
     cat.pin("orders", cluster_by="o_custkey", partitions=8)
@@ -785,13 +723,83 @@ def main() -> None:
     # from the cached 8-partition layout instead of the single-row-group
     # parquet file's one scan task
     cat.pin("documents", cluster_by="doc_id", partitions=8)
+    touch_tables(spark, sf_dir)
+    return spark
 
+
+def touch_tables(spark: SparkSession, sf_dir: str) -> None:
+    """Read every contract table once. The first read of a parquet
+    table runs a schema job; the Catalog keeps the resolved table for
+    the session, so after this no row's build is charged with it."""
+    from jane_spark.engine.catalog import TABLES, Catalog
+
+    cat = Catalog(spark, sf_dir)
+    for t in TABLES:
+        cat.table(t)
+
+
+class Build(NamedTuple):
+    """A row's prepared plan, its build seconds and the number of Spark
+    jobs the build launched."""
+
+    df: DataFrame
+    seconds: float
+    jobs: int
+
+    @property
+    def rebuild(self) -> bool:
+        """The row's timing class. A build that launched a Spark job
+        did data work (a driver loop's collects, a checkpoint, files
+        written), so each timed run rebuilds the row; timing only the
+        prepared plan would time its final read. A build that launched
+        none is a lazy plan, prepared once like a prepared statement."""
+        return self.jobs > 0
+
+
+def build(spark: SparkSession, sf_dir: str, qname: str) -> Build:
+    """Build contract ``qname`` under a job group of its own and count
+    the jobs in that group. Jobs from an operator's own threads count
+    only if those threads inherit the caller's local properties
+    (``pyspark.inheritable_thread_target``)."""
+    from jane_spark.contracts import REGISTRY
+
+    sc = spark.sparkContext
+    group = f"bench-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"build {qname}")
+    t0 = time.perf_counter()
+    try:
+        df = REGISTRY[qname].spark_fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    seconds = time.perf_counter() - t0
+    # the status tracker is fed by the listener bus: drain it so the
+    # count holds every job the build started
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return Build(df, seconds, len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def main(rows: list[str]) -> None:
+    """Time ``rows`` (bench names; every row when empty). Only a full
+    run writes ``docs/bench_last_full*.json``."""
+    unknown = [r for r in rows if r not in BENCH_QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown bench rows: {' '.join(unknown)}")
+    full_suite = not rows
+    rows = rows or list(BENCH_QUERIES)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+
+    from jane_spark.contracts import REGISTRY
+    from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
+
+    spark = start_session(sf_dir)
     con = _duckdb_connect(sf_dir)
     load_start = os.getloadavg()
 
     # Between-row hygiene baseline: everything persisted from here on
     # is a row's own scaffolding (localCheckpoint generations of
-    # REBUILD builds, materialize-before-rmtree sources). Dropping a
+    # rebuilt rows, materialize-before-rmtree sources). Dropping a
     # finished row's leftovers keeps the block manager at its
     # start-of-suite footprint, so row N's measurement doesn't pay
     # row N-1's storage pressure (measured 3x warm-exec inflation on
@@ -799,13 +807,15 @@ def main() -> None:
     # materialized above and survive in the baseline set). This is
     # hygiene between rows, not a timing-methodology change: every
     # timed run still computes from the parquet inputs.
-    from jane_spark.engine.ckpt import persistent_rdd_ids, unpersist_ids
-
     baseline_rdds = persistent_rdd_ids(spark)
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    build_s: dict[str, float] = {}
+    build_jobs: dict[str, int] = {}
+    first_exec_s: dict[str, float] = {}
+    rebuilt: list[str] = []
     loadavgs: dict[str, float] = {}
     ambients: dict[str, float] = {}
     steals: dict[str, float] = {}
@@ -817,12 +827,18 @@ def main() -> None:
     # not loop forever waiting for quiet that never comes. The PER-ROW
     # cap exists because chronic host STEAL (~1 core for hours, r13)
     # would otherwise burn the whole budget on one short row.
-    retry_budget = int(os.environ.get("SPARK_GRAFT_AMBIENT_RETRIES", "30"))
-    row_retry_cap = int(os.environ.get("SPARK_GRAFT_ROW_RETRIES", "3"))
-    for bench_name, qname in BENCH_QUERIES.items():
-        rebuild = bench_name in REBUILD_PER_RUN
-        df = REGISTRY[qname].spark_fn(spark, sf_dir)  # prepared plan
-        df.toPandas()  # untimed warm-up: codegen compile, broadcasts
+    retry_budget = 30
+    row_retry_cap = 3
+    for bench_name in rows:
+        qname = BENCH_QUERIES[bench_name]
+        prep = build(spark, sf_dir, qname)
+        t0 = time.perf_counter()
+        prep.df.toPandas()  # untimed warm-up: codegen compile, broadcasts
+        first_exec_s[bench_name] = round(time.perf_counter() - t0, 4)
+        build_s[bench_name] = round(prep.seconds, 4)
+        build_jobs[bench_name] = prep.jobs
+        if prep.rebuild:
+            rebuilt.append(bench_name)
         all_samples: list[float] = []
         row_tries = 0
         while True:
@@ -830,10 +846,10 @@ def main() -> None:
             samples = []
             for _ in range(RUNS):
                 t0 = time.perf_counter()
-                if rebuild:
+                if prep.rebuild:
                     REGISTRY[qname].spark_fn(spark, sf_dir).toPandas()
                 else:
-                    df.toPandas()
+                    prep.df.toPandas()
                 samples.append(time.perf_counter() - t0)
             amb_user, amb_steal = _ambient_cores(amb_t0)
             amb = amb_user + amb_steal
@@ -858,7 +874,7 @@ def main() -> None:
                 f"steal) — re-measuring",
                 file=sys.stderr,
             )
-            _wait_for_ambient_clear(AMBIENT_GATE_CORES)
+            _wait_for_ambient_clear()
         ambients[bench_name] = round(amb_user, 2)
         steals[bench_name] = round(amb_steal, 2)
         if amb > AMBIENT_GATE_CORES:
@@ -876,6 +892,12 @@ def main() -> None:
         # min→max spread: how much ambient noise this row carries —
         # a delta between rounds smaller than the spread is unreadable
         spreads[bench_name] = round(samples[-1] - samples[0], 4)
+        print(
+            f"[bench] {bench_name}: {timings[bench_name]:.4f} s; build "
+            f"{prep.seconds:.3f} s, {prep.jobs} jobs -> "
+            f"{'rebuild' if prep.rebuild else 'lazy'}",
+            file=sys.stderr,
+        )
         # interleaved A/B: time the DuckDB oracle for this row NOW, on
         # this box, so drift vs BASELINE.md is attributable
         if bench_name in CALIBRATION and REGISTRY[qname].oracle:
@@ -884,6 +906,11 @@ def main() -> None:
         unpersist_ids(spark, persistent_rdd_ids(spark) - baseline_rdds)
 
     total = round(sum(timings.values()), 4)
+    # the box (usable cores) and the session's task slots
+    box = {
+        "cpus": len(os.sched_getaffinity(0)),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+    }
     full = {
         "metric": "headline_suite_total_sec",
         "value": total,
@@ -891,6 +918,12 @@ def main() -> None:
         "queries": timings,
         "queries_median": medians,
         "queries_spread": spreads,
+        # build = the first spark_fn call; first_exec = the untimed
+        # warm-up; rebuild = the rows each timed run rebuilt
+        "queries_build_s": build_s,
+        "queries_build_jobs": build_jobs,
+        "queries_first_exec_s": first_exec_s,
+        "queries_rebuild": rebuilt,
         "queries_loadavg1m": loadavgs,
         "queries_ambient_cores": ambients,
         "queries_steal_cores": steals,
@@ -906,6 +939,7 @@ def main() -> None:
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "runs": RUNS,
         "sf": sf,
+        **box,
     }
     # Every BENCH_r0N.json since r6 came back `parsed: null`: the
     # driver tail-captures stdout and the full artifact is one long
@@ -914,19 +948,20 @@ def main() -> None:
     # the compact spec shape — small enough to survive any tail
     # window.
     print(json.dumps(full), file=sys.stderr)
-    docs_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "docs"
-    )
-    with open(os.path.join(docs_dir, "bench_last_full.json"), "w") as f:
-        json.dump(full, f)
-    # ALSO write a per-core-count dump: the driver runs the bench at
-    # two core counts and the second run used to clobber the first's
-    # full evidence (VERDICT r15 "what's wrong" #2)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "all")
-    with open(
-        os.path.join(docs_dir, f"bench_last_full_c{cpus}.json"), "w"
-    ) as f:
-        json.dump(full, f)
+    if full_suite:
+        docs_dir = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "docs"
+        )
+        with open(os.path.join(docs_dir, "bench_last_full.json"), "w") as f:
+            json.dump(full, f)
+        # ALSO write a per-core-count dump: the driver runs the bench at
+        # two core counts and the second run used to clobber the first's
+        # full evidence (VERDICT r15 "what's wrong" #2)
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "all")
+        with open(
+            os.path.join(docs_dir, f"bench_last_full_c{cpus}.json"), "w"
+        ) as f:
+            json.dump(full, f)
     # The driver tail-captures stdout; the FULL 168-row artifact (~6 KB
     # with diagnostics) overruns its window and every BENCH_r0N.json
     # since r6 came back `parsed: null`. Keep the spec shape but cap
@@ -952,10 +987,11 @@ def main() -> None:
         },
         "n_rows": len(timings),
         "sf": sf,
+        **box,
     }
     print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

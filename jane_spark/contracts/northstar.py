@@ -1781,8 +1781,8 @@ SELECT node, CAST(r AS BIGINT) AS rank_scaled FROM r{iters}"""
     "each round. Per iteration: one src-join (rank table broadcast at "
     "dimension-sized node sets) + one dst-groupBy; the edge table is "
     "checkpointed once and reused. When that edge table fits one task "
-    "(engine.onetask: Spark's per-row size estimate within the "
-    "broadcast threshold) all 5 rounds run in ONE Arrow task with the "
+    "(engine.onetask.one_task_rows: an exact row count of at most "
+    "onetask.MAX_ROWS) all 5 rounds run in ONE Arrow task with the "
     "same bigint arithmetic, and the ranks are checkpointed",
 )
 def q_k27_pagerank(spark, sf_dir):

@@ -1894,9 +1894,9 @@ def q_a17(spark, sf_dir):
 
         src = docs.withColumn("shard", (F.col("doc_id") % 8).cast("int"))
         # force the container writes (plan-build-time construction —
-        # the REBUILD_PER_RUN bench class, like the other A-series
-        # fixture builders); executor-local writes need local/shared
-        # storage, the write_webdataset caveat
+        # a build that launches jobs, which bench.py rebuilds per run,
+        # like the other A-series fixture builders); executor-local
+        # writes need local/shared storage, the write_webdataset caveat
         src.groupBy("shard").applyInPandas(build, "shard int").collect()
         good, quarantine = read_avro_quarantine(
             spark, f"{root}/*.avro", "doc_id long, lang string, n_chars long"

@@ -115,7 +115,7 @@ def _kmeans_loop(
     )
     centroids = _centroids_in_one_task(vecs, k, iters) if rows else None
     if centroids is None and rows != 0:  # rows == 0: nothing to seed
-        centroids = _centroids_distributed(vecs, k, iters)
+        centroids = _centroids_distributed(vecs, k, iters, vec_col)
     if not centroids:
         raise ValueError("vector table is empty: nothing to cluster")
     assigned = _assign(vecs, centroids).select(
@@ -146,14 +146,21 @@ def _assign(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
 
 
 def _centroids_distributed(
-    vecs: DataFrame, k: int, iters: int
+    vecs: DataFrame, k: int, iters: int, vec_col: str
 ) -> list[list[float]]:
     """The Lloyd loop as Spark jobs: one seed collect, then per round
     the assignment (a narrow map against the centroid literals) and
     ONE shuffle whose key cardinality is k×d, independent of corpus
-    size."""
-    # deterministic seeding: the k smallest ids' vectors
-    seed_rows = vecs.orderBy("__id").limit(k).select("__v").collect()
+    size. A NULL seed vector or element raises ``ValueError`` naming
+    ``vec_col``."""
+    # deterministic seeding: the k smallest ids' vectors, tied ids in
+    # vector order
+    seed_rows = vecs.orderBy("__id", "__v").limit(k).select("__v").collect()
+    if any(r["__v"] is None or None in r["__v"] for r in seed_rows):
+        raise ValueError(
+            f"k-means seed vector in column {vec_col!r} is NULL or holds "
+            "a NULL element"
+        )
     centroids = [list(r["__v"]) for r in seed_rows]
     for _ in range(iters):
         # round the mean to 9 dp: double addition is order-dependent
@@ -248,7 +255,7 @@ def _lloyd(
     """:func:`_centroids_distributed` on an ``n × d`` double matrix
     (row ``i`` is the vector of ``ids[i]``), or None when it cannot be
     reproduced exactly: a NULL id (Spark sorts it first), a tie among
-    the k + 1 smallest ids (the seed choice is then Spark's), or a
+    the k + 1 smallest ids (Spark then orders the seeds by vector), or a
     non-finite element (NaN and ±inf compare differently in SQL and
     NumPy).
 

@@ -891,6 +891,9 @@ def pq_fit(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub_d = dim // m
     from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    from pyspark import inheritable_thread_target
 
     from jane_spark.operators.semdedup import kmeans_fit
 
@@ -910,9 +913,14 @@ def pq_fit(
     # driver. Arithmetic per subspace is UNCHANGED (same plans, same
     # collects, same order within each chain), so codes and codebooks
     # are bit-identical to the sequential build.
-    slots = vectors.sparkSession.sparkContext.defaultParallelism
+    # Each fit runs with its own copy of the caller's thread-local
+    # properties (job group, description, job tags), cloned here on the
+    # calling thread: pool threads would otherwise start ungrouped jobs.
+    spark = vectors.sparkSession
+    fits = [inheritable_thread_target(spark)(partial(fit, s)) for s in range(m)]
+    slots = spark.sparkContext.defaultParallelism
     with ThreadPoolExecutor(max_workers=max(1, min(m, slots))) as pool:
-        books = list(pool.map(fit, range(m)))
+        books = list(pool.map(lambda f: f(), fits))
 
     # codes: ONE projection computing every subspace's argmin against
     # the trained codebook literals — the at-scale shape the docstring

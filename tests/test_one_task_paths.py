@@ -372,9 +372,9 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
     spark, monkeypatch, rows
 ):
     """The one task gives up (no rows back) and the distributed loop
-    fits the centroids, as it does with ``MAX_ROWS = 0``. (With tied
-    seed ids the seed order is Spark's choice, so only the centroid
-    set is compared.)"""
+    fits the centroids, as it does with ``MAX_ROWS = 0``; both runs
+    return the same centroids in the same order (tied seed ids take
+    their vectors in vector order)."""
     calls = []
     for fn in ("_centroids_in_one_task", "_centroids_distributed"):
         real = getattr(sd, fn)
@@ -389,7 +389,7 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
 
     def fit():
         cents = sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1]
-        return sorted([float(x).hex() for x in cv] for cv in cents)
+        return [[float(x).hex() for x in cv] for cv in cents]
 
     got = fit()
     assert calls == [
@@ -398,6 +398,22 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
     _distributed(monkeypatch)
     assert fit() == got
     assert calls[2:] == [("_centroids_distributed", True)]
+
+
+@pytest.mark.parametrize(
+    "seed", [None, [None, 1.0]], ids=["null_vector", "null_element"]
+)
+def test_kmeans_null_seed_raises_naming_the_column(spark, monkeypatch, seed):
+    """A NULL vector or element among the k smallest ids cannot seed the
+    loop: both paths raise a ValueError that names the vector column."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, seed), (2, [0.5, 0.5])], "id long, v array<double>"
+    )
+    with pytest.raises(ValueError, match="'v'"):
+        sd.kmeans_fit(df, "id", "v", k=2, iters=2)
+    _distributed(monkeypatch)
+    with pytest.raises(ValueError, match="'v'"):
+        sd.kmeans_fit(df, "id", "v", k=2, iters=2)
 
 
 def test_kmeans_wide_tables_and_empty_tables_skip_the_task(

@@ -510,6 +510,22 @@ def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
     assert all(jobs[n] <= cap for n, cap in budget.items()), jobs
 
 
+def test_pq_fit_jobs_inherit_the_callers_job_group(spark, sf_dir):
+    """pq_fit trains its subspace codebooks from a thread pool; every
+    job those threads start carries the caller's job group, so a
+    per-group count (bench.py's rebuild rule, the budget above) sees
+    them and none runs ungrouped."""
+    import bench
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    assert bench.build(spark, sf_dir, "q_k23_pq_codes").jobs > 0
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+
+
 def test_lm_scoring_joins_broadcast(spark, sf_dir):
     """T28/T33: every count-table scoring join must broadcast (the
     tables are vocabulary-bounded) — a sort-merge here would shuffle

@@ -1,11 +1,15 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for bench rows to plans/<tag>/<row>_<suffix>.txt."""
+"""Dump .explain("formatted") for bench rows to plans/<tag>/<row>_<suffix>.txt.
+
+Usage: python tools/dump_plans.py <tag> <suffix> row1 row2 ...
+(bench names or contract names; the session is bench.py's)."""
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -13,21 +17,11 @@ def main() -> None:
     suffix = sys.argv[2]       # before | after
     rows = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from bench import BENCH_QUERIES
+    from bench import BENCH_QUERIES, start_session
     from jane_spark.contracts import REGISTRY
-    from jane_spark.engine.catalog import Catalog
-    from jane_spark.engine.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
-    spark = get_spark("jane_spark_plans")
-    cat = Catalog(spark, sf_dir)
-    cat.pin("events", cluster_by="user_id", partitions=8)
-    cat.pin("orders", cluster_by="o_custkey", partitions=8)
-    cat.pin("documents", cluster_by="doc_id", partitions=8)
-
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", tag)
+    spark = start_session(sf_dir, "jane_spark_plans")
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in rows:
         qname = BENCH_QUERIES.get(name, name)
