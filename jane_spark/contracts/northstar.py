@@ -230,7 +230,9 @@ def q_k33(spark, sf_dir):
     # recall vs exact top-k is asserted in tests/test_operators.py
     survey_rows="K3",
     doc="IVF coarse quantizer: k-means lists + n_probe search — the "
-    "data-adaptive approximate-NN scale path (operators.vector.ivf_topk)",
+    "data-adaptive approximate-NN scale path (operators.vector.ivf_topk; "
+    "the quantizer trains through operators.semdedup.kmeans_fit, 2 Lloyd "
+    "rounds over 8 lists, and lists are assigned and probed by cosine)",
 )
 def q_k3_ivf(spark, sf_dir):
     from jane_spark.operators.vector import ivf_topk

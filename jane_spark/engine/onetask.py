@@ -1,8 +1,9 @@
 """When a materialized table is small enough to run an operator's whole
 loop in one task.
 
-The fixed-count loops (PageRank rounds, BPE merges, Lloyd rounds)
-are written as one Spark job chain per round, because that is the
+The fixed-count loops (PageRank rounds, BPE merges, Lloyd rounds,
+which also fit product quantization's m codebooks in one call) are
+written as one Spark job chain per round, because that is the
 only shape that runs on graphs, vocabularies and corpora too large
 for one task. When the table the loop reads is small, the loop's time
 is the per-round job and scheduling floor, not compute: 46 jobs and
@@ -64,7 +65,9 @@ id-sorted matrix and the distance blocks hold about five copies of
 the cells. ``MAX_CELLS`` is 4M cells: there the one task is 3-4x
 faster, a margin a distributed loop on three times the cores would
 not close, and the task holds about 150 MB. Below 16 dimensions
-``MAX_ROWS`` is the tighter bound.
+``MAX_ROWS`` is the tighter bound. For product quantization the cells
+are one subvector slice's, the size of one fit: the task fits all m
+slices in turn, so it holds m times that many input cells.
 """
 
 from __future__ import annotations

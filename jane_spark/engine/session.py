@@ -105,6 +105,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the console progress bar redraws on stderr with carriage
+        # returns and splices itself into other stderr lines
+        .config("spark.ui.showConsoleProgress", "false")
         # Static, so pinned here rather than in RUNTIME_CONFS. Every
         # Python task calls importlib.invalidate_caches(), which on
         # CPython < 3.12 re-reads pyspark.zip's directory once per

@@ -23,20 +23,27 @@ Two pieces, composable:
 Cluster assignment can come from ``kmeans_assign`` or from any
 existing label column — the dedup stage is agnostic.
 
-Two Lloyd loops, one result. The distributed loop is one seed collect
-plus one collect per round (~11 driver-scheduled jobs for 5 rounds)
-whatever the corpus size. So when the vectors fit one task
+One Lloyd loop, two places to run it. :func:`_kmeans_loop` fits k
+centroids to each of ``m`` equal-width slices of the vector at once:
+``kmeans_fit`` is the ``m = 1`` whole-vector case, and product
+quantization (``vector.pq_fit``) fits its m codebooks in the same
+call. Run as Spark jobs the loop is one seed collect plus one collect
+per round whatever the corpus size. So when the vectors fit one task
 (``engine.onetask.one_task_rows``: at most ``MAX_ROWS`` rows and
-``MAX_CELLS`` elements, bounds set from measured timings of both
-paths), ``coalesce(1).mapInArrow`` runs the seeding and every round
-in one Python task (:func:`_lloyd`) with the SQL loop's arithmetic:
-the left-folded squared-L2, the smaller-id tie-break, and Spark's
-HALF_UP ``round(avg, 9)``. Only the k×d centroids come back; the
-assignment either path returns is the same lazy SQL projection
-against them. Larger tables, ids whose Python order is not Spark's,
-and inputs the twin cannot reproduce exactly (NULL vectors or
-elements, NaN, infinities, ragged lengths, tied seed ids) keep the
-distributed loop, which is also the reference for the parity tests.
+``MAX_CELLS`` elements of one slice, bounds set from measured timings
+of both paths), ``coalesce(1).mapInArrow`` runs the seeding and every
+round of every slice in one Python task (:func:`_lloyd`) with the SQL
+loop's arithmetic: the left-folded squared-L2, the smaller-id
+tie-break, and Spark's HALF_UP ``round(avg, 9)``. Only the k×d
+centroids come back; the assignment either path returns is the same
+lazy SQL projection against them. Larger tables, ids whose Python
+order is not Spark's, and slices the twin cannot reproduce exactly
+(NULL vectors or elements, NaN, infinities, ragged lengths, tied seed
+ids) go to the distributed loop, which fits every such slice in the
+same rounds and is also the reference for the parity tests. A vector
+that is NULL, holds a NULL element or differs in length from the
+centroids has no distance to them: fitting raises ``ValueError``
+rather than put it in some cluster.
 """
 
 from __future__ import annotations
@@ -53,17 +60,41 @@ from jane_spark.engine.onetask import one_task_rows
 from jane_spark.functions.arrays import cosine_from_norms, norm
 
 
-def _sql_double(x: float) -> str:
-    """Exact SQL double literal: ``repr(x)`` is the shortest decimal
-    that round-trips to the same IEEE-754 double in Python, and SQL's
-    string→double cast (Java ``Double.parseDouble``) is correctly
-    rounded, so the parsed value is bit-identical to ``F.lit(x)``.
-    String form instead of ``F.lit`` because building k×d literal
-    arrays element-by-element through py4j costs ~1.4 s per centroid
-    table (measured, r15 optimization round) vs ~3 ms for one
-    ``F.expr`` string — driver time that REBUILD-class training loops
-    pay every Lloyd round."""
-    return f"CAST('{x!r}' AS DOUBLE)"
+def _sql_darr(vals) -> str:
+    """SQL double-array literal ``array(CAST('…' AS DOUBLE), …)``:
+    ``repr(x)`` is the shortest decimal that round-trips to the same
+    IEEE-754 double in Python, and SQL's string→double cast (Java
+    ``Double.parseDouble``) is correctly rounded, so the parsed array
+    is bit-identical to ``F.array(*[F.lit(x) …])``. String form
+    because building k×d literal arrays element by element through
+    py4j costs ~1.4 s per 8×64 centroid table (measured, r15
+    optimization round) vs ~3 ms for one ``F.expr`` string, driver
+    time a training loop would pay every Lloyd round."""
+    return "array(%s)" % ",".join(
+        f"CAST('{float(x)!r}' AS DOUBLE)" for x in vals
+    )
+
+
+def _argmin_sql(vec_sql: str, centroids) -> str:
+    """The id of the centroid nearest to the array ``vec_sql`` as ONE
+    SQL expression: squared L2 as the left fold ``acc + (a - b)²``
+    from 0.0 in dimension order, ties toward the smaller centroid id
+    (array_min over (dist, cid) structs compares lexicographically).
+    NULL when some distance is NULL (a NULL vector or element, or a
+    length that differs from the centroids', which ``zip_with`` pads
+    with NULL): array_min sorts that struct first, and its cid is
+    NULL. The Lloyd rounds, ``kmeans_fit``'s assignment and the PQ
+    codes all use this one expression."""
+    carr = ",".join(
+        "named_struct('cid', %d, 'cv', %s)" % (cid, _sql_darr(cv))
+        for cid, cv in enumerate(centroids)
+    )
+    return (
+        f"array_min(transform(array({carr}), c -> aggregate(zip_with("
+        f"{vec_sql}, c.cv, (a, b) -> (a - b) * (a - b)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x, acc -> named_struct("
+        "'dist', acc, 'cid', IF(acc IS NULL, NULL, c.cid))))).cid"
+    )
 
 
 def kmeans_fit(
@@ -77,9 +108,15 @@ def kmeans_fit(
     by cluster id, each coordinate already rounded 9 dp by the update
     step) — the coarse-quantizer training surface IVF builds on
     (r7: the centroids are the same ones the final assignment used,
-    so downstream list assignment is self-consistent)."""
-    assign_df, cents = _kmeans_loop(df, id_col, vec_col, k, iters)
-    return assign_df, cents
+    so downstream list assignment is self-consistent). Raises
+    ``ValueError`` naming ``vec_col`` for a vector that is NULL, holds
+    a NULL element or differs in length from the centroids."""
+    vecs, (cents,) = _kmeans_loop(df, id_col, vec_col, k, iters)
+    assigned = vecs.select(
+        F.col("__id").alias(id_col),
+        F.expr(_argmin_sql("__v", cents)).alias("cluster"),
+    )
+    return assigned, cents
 
 
 def _kmeans_loop(
@@ -88,15 +125,18 @@ def _kmeans_loop(
     vec_col: str,
     k: int,
     iters: int,
-) -> "tuple[DataFrame, list[list[float]]]":
-    """Deterministic Lloyd's k-means over an ``array<float>`` column;
-    returns ``(id, cluster)`` and the fitted centroids.
+    slices: "tuple[str, ...]" = ("__v",),
+) -> "tuple[DataFrame, list[list[list[float]]]]":
+    """Deterministic Lloyd's k-means over an ``array<float>`` column,
+    run on each slice at once: ``slices`` are SQL array expressions
+    over ``__v`` (the vector cast to double), the whole ``__v`` by
+    default. Returns the ``(__id, __v)`` frame the assignment projects
+    from and, per slice, its fitted centroids.
 
-    The centroids come from one of two loops with one result (module
+    The centroids come from one of two places with one result (module
     docstring): :func:`_centroids_in_one_task` when the vectors fit one
-    task, else :func:`_centroids_distributed`. Either way the returned
-    assignment is the same lazy SQL projection against the final
-    centroid literals, so its plan does not depend on the path.
+    task, then :func:`_centroids_distributed` for every slice the task
+    could not fit.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -106,130 +146,146 @@ def _kmeans_loop(
     )
     id_t = vecs.schema["__id"].dataType
     # seeding orders by id: only ids whose Python order is Spark's.
-    # The gate reads the unmaterialized input once more, where the
-    # distributed loop reads it iters + 1 times.
+    # The gate counts one slice's cells, the size of one fit; it reads
+    # the unmaterialized input once more, where the distributed loop
+    # reads it iters + 1 times.
     rows = (
-        one_task_rows(vecs, F.greatest(F.size("__v"), F.lit(0)))
+        one_task_rows(vecs, F.greatest(F.size(F.expr(slices[0])), F.lit(0)))
         if isinstance(id_t, IntegralType) or id_t == StringType()
         else None
     )
-    centroids = _centroids_in_one_task(vecs, k, iters) if rows else None
-    if centroids is None and rows != 0:  # rows == 0: nothing to seed
-        centroids = _centroids_distributed(vecs, k, iters, vec_col)
-    if not centroids:
+    books = (
+        _centroids_in_one_task(vecs, slices, k, iters)
+        if rows
+        else [None] * len(slices)
+    )
+    pending = [s for s, book in enumerate(books) if book is None]
+    if pending and rows != 0:  # rows == 0: nothing to seed
+        fitted = _centroids_distributed(
+            vecs, [slices[s] for s in pending], k, iters, vec_col
+        )
+        for s, book in zip(pending, fitted):
+            books[s] = book
+    if not all(books):
         raise ValueError("vector table is empty: nothing to cluster")
-    assigned = _assign(vecs, centroids).select(
-        F.col("__id").alias(id_col), F.col("cluster").cast("int").alias("cluster")
-    )
-    return assigned, centroids
-
-
-def _assign(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """``vecs`` plus ``cluster``: the argmin squared-L2 centroid with
-    ties toward the smaller centroid id (array_min over (dist, cid)
-    structs compares lexicographically). The whole expression is ONE
-    SQL string (see _sql_double): the k×d centroid literals are the
-    same IEEE doubles F.lit would produce, without the ~1.4 s/round of
-    py4j element calls."""
-    carr = ",".join(
-        "named_struct('cid', %d, 'cv', array(%s))"
-        % (cid, ",".join(_sql_double(float(x)) for x in cv))
-        for cid, cv in enumerate(centroids)
-    )
-    dists = (
-        f"array_min(transform(array({carr}), c -> named_struct("
-        "'dist', aggregate(zip_with(__v, c.cv, (a, b) -> "
-        "(a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
-        "(acc, x) -> acc + x), 'cid', c.cid))).cid"
-    )
-    return vecs.withColumn("cluster", F.expr(dists))
+    return vecs, books
 
 
 def _centroids_distributed(
-    vecs: DataFrame, k: int, iters: int, vec_col: str
-) -> list[list[float]]:
-    """The Lloyd loop as Spark jobs: one seed collect, then per round
-    the assignment (a narrow map against the centroid literals) and
-    ONE shuffle whose key cardinality is k×d, independent of corpus
-    size. A NULL seed vector or element raises ``ValueError`` naming
-    ``vec_col``."""
+    vecs: DataFrame, slices: "list[str]", k: int, iters: int, vec_col: str
+) -> "list[list[list[float]]]":
+    """The Lloyd loop as Spark jobs, every slice in the same jobs: one
+    seed collect, then per round ONE projection assigning each slice
+    (a narrow map against the centroid literals) and ONE shuffle keyed
+    by (slice, cluster, dim), k×d cells per slice whatever the corpus
+    size. A NULL seed vector or element, and in any round a vector
+    without a distance to the centroids (:func:`_argmin_sql`), raise
+    ``ValueError`` naming ``vec_col``."""
     # deterministic seeding: the k smallest ids' vectors, tied ids in
-    # vector order
-    seed_rows = vecs.orderBy("__id", "__v").limit(k).select("__v").collect()
-    if any(r["__v"] is None or None in r["__v"] for r in seed_rows):
+    # whole-vector order
+    seeds = (
+        vecs.orderBy("__id", "__v").limit(k)
+        .select(*[F.expr(sl) for sl in slices]).collect()
+    )
+    if any(v is None or None in v for r in seeds for v in r):
         raise ValueError(
             f"k-means seed vector in column {vec_col!r} is NULL or holds "
             "a NULL element"
         )
-    centroids = [list(r["__v"]) for r in seed_rows]
+    books = [[list(r[s]) for r in seeds] for s in range(len(slices))]
     for _ in range(iters):
         # round the mean to 9 dp: double addition is order-dependent
         # under shuffle, and an unrounded ulp wobble in a centroid could
         # flip a near-tie assignment between runs/partitionings.
-        # Collect the (cluster, dim, m) cells directly — k x d rows,
-        # driver-sized — and assemble the arrays here instead of paying
-        # a SECOND shuffle per round just to collect_list them into
-        # arrays engine-side (the train_ivf_centroids collect shape;
-        # guide §2.4 remove shuffles outright — one stage fewer per
-        # Lloyd round, same avg + round arithmetic, values identical).
+        # Collect the (slice, cluster, dim, m) cells directly, k x d
+        # rows per slice, driver-sized, and assemble the arrays here
+        # instead of paying a SECOND shuffle per round to collect_list
+        # them engine-side (guide §2.4). The outer explode keeps a
+        # NULL or empty slice as one row, so its NULL cluster reaches
+        # the collect.
+        parts = F.array(*[
+            F.struct(
+                F.lit(s).alias("slice"),
+                F.expr(_argmin_sql(sl, books[s])).alias("cluster"),
+                F.expr(sl).alias("sv"),
+            )
+            for s, sl in enumerate(slices)
+        ])
         means = (
-            _assign(vecs, centroids)
-            .select("cluster", F.posexplode("__v").alias("dim", "val"))
-            .groupBy("cluster", "dim")
+            vecs.select(F.inline(parts))
+            .select("slice", "cluster", F.posexplode_outer("sv").alias("dim", "val"))
+            .groupBy("slice", "cluster", "dim")
             .agg(F.round(F.avg("val"), 9).alias("m"))
             .collect()
         )
-        cells: dict[int, dict[int, float]] = {}
+        cells: dict[tuple[int, int], dict[int, float]] = {}
         for r in means:
-            cells.setdefault(r["cluster"], {})[r["dim"]] = r["m"]
+            if r["cluster"] is None:
+                raise ValueError(
+                    f"k-means vector in column {vec_col!r} is NULL, holds a "
+                    "NULL element or differs in length from the centroids"
+                )
+            cells.setdefault((r["slice"], r["cluster"]), {})[r["dim"]] = r["m"]
         # empty clusters keep their previous centroid (deterministic);
-        # a dim missing from a non-empty cluster's cells (ragged/short
-        # input vectors) keeps that coordinate too instead of raising
-        # (ADVICE r15 — fixed-dim inputs are unaffected: every cell is
-        # present and the .get never falls back)
-        centroids = [
-            [cells[cid].get(d, cv[d]) for d in range(len(cv))]
-            if cid in cells else cv
-            for cid, cv in enumerate(centroids)
+        # a member of a non-empty cluster has every dim of its centroid
+        books = [
+            [
+                [cells[s, cid][d] for d in range(len(cv))]
+                if (s, cid) in cells else cv
+                for cid, cv in enumerate(book)
+            ]
+            for s, book in enumerate(books)
         ]
-    return centroids
+    return books
 
 
 def _centroids_in_one_task(
-    vecs: DataFrame, k: int, iters: int
-) -> "list[list[float]] | None":
-    """:func:`_lloyd` over the whole ``(__id, __v)`` table in one Arrow
-    task; None when the table holds an input it cannot reproduce."""
+    vecs: DataFrame, slices: "tuple[str, ...]", k: int, iters: int
+) -> "list[list[list[float]] | None]":
+    """:func:`_lloyd` on each slice of the ``(__id, __v)`` table in one
+    Arrow task; per slice its centroids, or None when the slice holds
+    an input the twin cannot reproduce."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     def run(batches):
-        ids, vs = [], []
-        for b in batches:
-            ids.append(b.column("__id"))
-            vs.append(b.column("__v"))
-        if not vs:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-        v = pa.chunked_array(vs).combine_chunks()
-        if not len(v):
-            return
-        lens = pc.list_value_length(v).to_numpy(zero_copy_only=False)
-        flat = v.flatten()
-        if v.null_count or flat.null_count or (lens != lens[0]).any():
-            return  # null vectors, null elements or ragged lengths
-        cents = _lloyd(
-            pa.chunked_array(ids).to_pylist(),
-            flat.to_numpy(zero_copy_only=False).reshape(len(v), lens[0]),
-            k,
-            iters,
-        )
-        if cents is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cents, pa.list_(pa.float64()))], names=["cv"]
+        ids = pa.chunked_array([b.column("__id") for b in batches]).to_pylist()
+        for s in range(len(slices)):
+            v = pa.chunked_array([b.column(f"__s{s}") for b in batches])
+            v = v.combine_chunks()
+            lens = pc.list_value_length(v).to_numpy(zero_copy_only=False)
+            flat = v.flatten()
+            if v.null_count or flat.null_count or (lens != lens[0]).any():
+                continue  # null vectors, null elements or ragged lengths
+            cents = _lloyd(
+                ids,
+                flat.to_numpy(zero_copy_only=False).reshape(len(v), lens[0]),
+                k,
+                iters,
             )
+            if cents is not None:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([s] * len(cents), pa.int32()),
+                        pa.array(cents, pa.list_(pa.float64())),
+                    ],
+                    names=["slice", "cv"],
+                )
 
-    got = vecs.coalesce(1).mapInArrow(run, "cv array<double>").collect()
-    return [list(r["cv"]) for r in got] if got else None
+    cols = [F.expr(sl).alias(f"__s{s}") for s, sl in enumerate(slices)]
+    got = (
+        vecs.select("__id", *cols)
+        .coalesce(1)
+        .mapInArrow(run, "slice int, cv array<double>")
+        .collect()
+    )
+    books: "list[list[list[float]]]" = [[] for _ in slices]
+    for r in got:
+        books[r["slice"]].append(list(r["cv"]))
+    return [book or None for book in books]
 
 
 _ROUND_CTX = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)
@@ -310,9 +366,9 @@ def kmeans_assign(
     k: int = 8,
     iters: int = 5,
 ) -> DataFrame:
-    """Backwards-compatible assignment-only view of ``_kmeans_loop``
+    """Backwards-compatible assignment-only view of ``kmeans_fit``
     (docstring above on the loop)."""
-    return _kmeans_loop(df, id_col, vec_col, k, iters)[0]
+    return kmeans_fit(df, id_col, vec_col, k, iters)[0]
 
 
 def semantic_dedup(

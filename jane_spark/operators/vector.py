@@ -40,18 +40,13 @@ from pyspark.sql import functions as F
 
 from jane_spark.engine.ckpt import Generations
 from jane_spark.functions.arrays import cosine_from_norms, norm
+from jane_spark.operators.semdedup import (
+    _argmin_sql,
+    _kmeans_loop,
+    _sql_darr,
+    kmeans_fit,
+)
 from jane_spark.operators.topk import top_k_per_group
-
-
-def _sql_darr(vals) -> str:
-    """SQL double-array literal ``array(CAST('…' AS DOUBLE), …)`` —
-    ``repr`` round-trips each IEEE double exactly and the string cast
-    is correctly rounded, so the parsed array is bit-identical to the
-    ``F.array(*[F.lit(x) …])`` form it replaces, without the py4j
-    per-element round trips (~1.4 s per 8×64 table, measured r15)."""
-    return "array(%s)" % ",".join(
-        f"CAST('{float(x)!r}' AS DOUBLE)" for x in vals
-    )
 
 
 def _sql_adc_entries(res_col: str, books, m: int, k: int, sub_d: int) -> str:
@@ -69,26 +64,6 @@ def _sql_adc_entries(res_col: str, books, m: int, k: int, sub_d: int) -> str:
                 "(acc, x) -> acc + x), 9)"
             )
     return "array(%s)" % ",".join(ent)
-
-
-def _pq_code_sql(vec_col: str, book, s: int, sub_d: int) -> str:
-    """Subspace ``s``'s PQ code as ONE SQL expression: the kmeans
-    assignment argmin (array_min over (dist, cid) structs — squared-L2
-    left-fold, ties to the smaller centroid id) evaluated against the
-    trained codebook literals over ``slice(vec, s·sub_d+1, sub_d)``.
-    Byte-for-byte the Lloyd assign expression, so codes match the
-    per-subspace ``kmeans_assign`` output bit-for-bit."""
-    carr = ",".join(
-        "named_struct('cid', %d, 'cv', %s)" % (cid, _sql_darr(cv))
-        for cid, cv in enumerate(book)
-    )
-    return (
-        f"CAST(array_min(transform(array({carr}), c -> named_struct("
-        f"'dist', aggregate(zip_with(slice({vec_col}, {s * sub_d + 1}, "
-        f"{sub_d}), c.cv, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x), "
-        "'cid', c.cid))).cid AS INT)"
-    )
 
 
 def brute_force_topk(
@@ -456,45 +431,6 @@ def _assign_lists(
     return vectors.select(id_col, vec_col).mapInPandas(part, schema=out_schema)
 
 
-def train_ivf_centroids(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_lists: int,
-    lloyd_iters: int = 2,
-    dim: int | None = None,
-) -> np.ndarray:
-    """Coarse-quantizer training: deterministic seeding (first n_lists
-    vectors by id) + Lloyd iterations. Assignment runs distributed
-    (GEMM per batch); the centroid update collects only the per-list
-    per-dimension means — n_lists × d doubles, driver-sized at any
-    corpus scale."""
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    seeds = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(n_lists)
-        .collect()
-    )
-    centroids = np.array([r[1] for r in seeds], dtype=np.float64)
-    for _ in range(lloyd_iters):
-        assigned = _assign_lists(vectors, id_col, vec_col, centroids, n_probe=1)
-        means = (
-            assigned.select(
-                "list_id", F.posexplode(F.col(vec_col)).alias("pos", "x")
-            )
-            .groupBy("list_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = centroids.copy()  # empty lists keep their centroid
-        for r in means:
-            new[r["list_id"], r["pos"]] = r["m"]
-        centroids = new
-    return centroids
-
-
 def ivf_topk(
     vectors: DataFrame,
     id_col: str,
@@ -514,11 +450,15 @@ def ivf_topk(
     Everything after training is an equi-join on ``list_id`` — the same
     scale shape as LSH, but data-adaptive: on clustered embeddings the
     probed lists hold most true neighbors (recall rises with n_probe;
-    n_probe = n_lists degrades gracefully to exact search).
+    n_probe = n_lists degrades gracefully to exact search). Without
+    ``centroids`` the quantizer trains through ``kmeans_fit``:
+    ``lloyd_iters`` deterministic Lloyd rounds over ``n_lists``
+    centroids; lists are then assigned and probed by cosine.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, id_col, vec_col, n_lists, lloyd_iters
+        centroids = np.array(
+            kmeans_fit(vectors, id_col, vec_col, k=n_lists, iters=lloyd_iters)[1],
+            dtype=np.float64,
         )
     corpus = _assign_lists(
         vectors, id_col, vec_col, centroids, n_probe=1,
@@ -862,13 +802,13 @@ def pq_encode(
     config stores 16 bytes per vector, a 32× memory cut for the
     re-rank working set).
 
-    Contract shape: one Lloyd loop per subvector (one Arrow task when
-    the slice fits one task, else k×(d/m) centroid literals and one
-    keyed shuffle per iteration) + ``m-1`` id-equi joins to assemble
-    the tuple. At scale the joins disappear: train
-    the m codebooks, then ONE projection computes every code against
-    the broadcast codebook literals. Codes are integers end to end —
-    no float boundary can flip a hash comparison."""
+    Contract shape: ONE Lloyd loop fits all m codebooks (one Arrow
+    task when a subvector slice fits one task; otherwise per round one
+    projection assigning every slice against its k×(d/m) centroid
+    literals and one keyed shuffle), then ONE projection computes
+    every code against the codebook literals: no id-equi joins to
+    assemble the tuple. Codes are integers end to end — no float
+    boundary can flip a hash comparison."""
     return pq_fit(vectors, id_col, vec_col, dim, m, k, iters)[0]
 
 
@@ -890,59 +830,17 @@ def pq_fit(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub_d = dim // m
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import partial
-
-    from pyspark import inheritable_thread_target
-
-    from jane_spark.operators.semdedup import kmeans_fit
-
-    def fit(s: int):
-        sub = vectors.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), s * sub_d + 1, sub_d).alias("__sub"),
-        )
-        return kmeans_fit(sub, id_col, "__sub", k=k, iters=iters)[1]
-
-    # the m subspace fits are INDEPENDENT driver-action chains (each
-    # is its own Lloyd loop over a disjoint slice of the vector: a gate
-    # count and one task when the slice fits one task, else a seed
-    # collect and one collect per round) — run them from a thread pool
-    # as wide as the executor slots so their jobs overlap and
-    # back-fill executors (guide §2.6) instead of serializing on the
-    # driver. Arithmetic per subspace is UNCHANGED (same plans, same
-    # collects, same order within each chain), so codes and codebooks
-    # are bit-identical to the sequential build.
-    # Each fit runs with its own copy of the caller's thread-local
-    # properties (job group, description, job tags), cloned here on the
-    # calling thread: pool threads would otherwise start ungrouped jobs.
-    spark = vectors.sparkSession
-    fits = [inheritable_thread_target(spark)(partial(fit, s)) for s in range(m)]
-    slots = spark.sparkContext.defaultParallelism
-    with ThreadPoolExecutor(max_workers=max(1, min(m, slots))) as pool:
-        books = list(pool.map(lambda f: f(), fits))
-
-    # codes: ONE projection computing every subspace's argmin against
-    # the trained codebook literals — the at-scale shape the docstring
-    # promised (guide §2.4: the m−1 id-equi joins and their exchanges
-    # disappear; r15 optimization round). The argmin expression is the
-    # kmeans assign SQL verbatim (array_min over (dist, cid) structs,
-    # left-folded zip_with squared-L2, ties to the smaller cid) over
-    # slice(cast-to-double vec) — cast and slice commute elementwise,
-    # so every code is bit-identical to the per-subspace Lloyd
-    # assignment it replaces.
-    out = vectors.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            "__pqd"
-        ),
-    ).select(
-        F.col(id_col),
+    # the m subspace fits are independent k-means problems over
+    # disjoint slices of the same vector: one Lloyd loop fits them all
+    slices = tuple(f"slice(__v, {s * sub_d + 1}, {sub_d})" for s in range(m))
+    vecs, books = _kmeans_loop(vectors, id_col, vec_col, k, iters, slices)
+    # codes: ONE projection of every slice's argmin against its
+    # codebook literals, the expression the Lloyd rounds assign with
+    out = vecs.select(
+        F.col("__id").alias(id_col),
         *[
-            F.expr(
-                _pq_code_sql("__pqd", books[s], s, sub_d)
-            ).alias(f"code_{s}")
-            for s in range(m)
+            F.expr(_argmin_sql(sl, book)).alias(f"code_{s}")
+            for s, (sl, book) in enumerate(zip(slices, books))
         ],
     )
     return out, books
@@ -1134,24 +1032,16 @@ def ivf_pq_topk(
     each query row carries its m×k lookup table; one a_id-keyed
     top-k shuffle finishes. Self-query here (every vector searches);
     an external query set just swaps the probe side."""
-    from jane_spark.operators.semdedup import kmeans_fit
-
-    # one checkpoint feeds EVERY consumer (coarse Lloyd jobs, the
-    # GEMM probe pass, the m-subspace PQ training jobs, the per-query
-    # ADC tables): without it each of those jobs re-runs the scan+cast
-    # lineage — the same multi-consumer training-input rule the
-    # residual path applies (guide §5; the 6c40351 A/B class: 12+
-    # amortizing consumers). Lazy when kmeans_fit runs first (its
-    # one-task gate count, a single-threaded action on either Lloyd
-    # path, materializes the mark); EAGER on the ``centroids=...``
-    # path, where the first consumers are pq_fit's CONCURRENT subspace
-    # fits — lazy there would race threads into duplicated
-    # materialization (the 6c40351 mode; ADVICE r15). Retention: the
+    # one checkpoint feeds EVERY consumer (the coarse and PQ Lloyd
+    # loops, the GEMM probe pass, the per-query ADC tables): without it
+    # each of those jobs re-runs the scan+cast lineage (guide §5; the
+    # 6c40351 A/B class: 12+ amortizing consumers). Lazy: the first
+    # Lloyd loop's one-task gate count materializes it. Retention: the
     # returned plan references the ``assigned`` checkpoint derived
     # from this one; both persist for the session unless the caller
     # unpersists after materializing (bench.py's between-row hygiene
     # does).
-    vectors = vectors.localCheckpoint(eager=centroids is not None)
+    vectors = vectors.localCheckpoint(eager=False)
     if centroids is None:
         _assign, cents = kmeans_fit(
             vectors, id_col, vec_col, k=n_lists, iters=lloyd_iters
@@ -1262,8 +1152,6 @@ def ivf_pq_residual_topk(
     (per (query, list) instead of per query) but stays m·k doubles
     per probe row, carried with the broadcast-sized probe set.
     """
-    from jane_spark.operators.semdedup import kmeans_fit
-
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub_d = dim // m
@@ -1298,8 +1186,8 @@ def ivf_pq_residual_topk(
             lambda a, b: a - b,
         ).alias("__res"),
     )
-    # checkpoint the residuals: the m-subspace PQ trainer jobs (gate
-    # counts and fits) re-execute their input lineage per job — scan →
+    # checkpoint the residuals: the PQ Lloyd loop's jobs (its gate
+    # count and fit) re-execute their input lineage per job — scan →
     # GEMM assign → project — without the cut (guide §5,
     # localCheckpoint to truncate lineage; r15). Values unchanged.
     residuals = residuals.localCheckpoint(eager=False)
@@ -3153,7 +3041,7 @@ def opq_encode(
     # checkpoint the rotated vectors: the d×d literal rotation (d²
     # multiply-adds per row AND a d²-term expression Catalyst
     # re-analyzes per job) would otherwise re-run under every PQ
-    # training collect — 12× for m=4, iters=2 (guide §5; r15).
+    # training job (guide §5; r15).
     return pq_encode(
         rot.localCheckpoint(eager=False), id_col, "__rot", dim, m, k, iters
     )
@@ -3296,7 +3184,7 @@ def ivf_assign_batch(
 ) -> DataFrame:
     """Assign a NEW ingest batch to EXISTING IVF centroids WITHOUT
     retraining — the operational half of IVF at 100 TB: the coarse
-    quantizer trains once (train_ivf_centroids / kmeans_fit), new
+    quantizer trains once (``kmeans_fit``, as ``ivf_topk`` does), new
     data streams in daily, and re-running Lloyd over the full corpus
     per batch would re-scan history for nothing. Assignment is the
     same broadcast-centroid argmax the trained path uses (ONE

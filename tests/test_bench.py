@@ -13,7 +13,7 @@ import bench
 @pytest.mark.parametrize(
     "qname, rebuild",
     [
-        ("q_k23_pq_codes", True),   # 4 subspace k-means fits
+        ("q_k23_pq_codes", True),   # one Lloyd loop fits 4 codebooks
         ("q_k27_pagerank", True),   # edge checkpoint + one-task ranks
         ("q_k42_sq", False),        # one lazy plan, zero driver collects
         ("q_k33_mmr", False),       # one lazy plan

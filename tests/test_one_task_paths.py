@@ -1,8 +1,9 @@
-"""PageRank, BPE training and the k-means Lloyd loop each have two
-paths: a table that fits one task (engine.onetask) runs the whole loop
-in one Arrow task, a larger one keeps the distributed loop. Each test
-forces both paths through ``onetask.MAX_ROWS`` (its value vs 0), checks
-which one ran, and requires identical results."""
+"""PageRank, BPE training and the k-means Lloyd loop (which also fits
+product quantization's m codebooks) each have two paths: a table that
+fits one task (engine.onetask) runs the whole loop in one Arrow task,
+a larger one keeps the distributed loop. Each test forces both paths
+through ``onetask.MAX_ROWS`` (its value vs 0), checks which one ran,
+and requires identical results."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from jane_spark.engine.ckpt import persistent_rdd_ids
 from jane_spark.operators import bpe
 from jane_spark.operators import pagerank as pr
 from jane_spark.operators import semdedup as sd
+from jane_spark.operators import vector as vec
 from tests.test_bpe import py_train_bpe
 
 
@@ -354,19 +356,31 @@ def test_kmeans_string_ids_seed_in_code_point_order(spark, monkeypatch):
     assert one[0] == [[(3.0).hex()], [(1.0).hex()]]
 
 
+def _spy_on_both_loops(monkeypatch) -> list:
+    """Records ``(loop, per-slice fitted?)`` for every call of the
+    one-task and the distributed Lloyd loop."""
+    calls = []
+    for fn in ("_centroids_in_one_task", "_centroids_distributed"):
+        real = getattr(sd, fn)
+
+        def spy(*a, _fn=fn, _real=real):
+            got = _real(*a)
+            calls.append((_fn, [book is not None for book in got]))
+            return got
+
+        monkeypatch.setattr(sd, fn, spy)
+    return calls
+
+
 @pytest.mark.parametrize(
     "rows",
     [
-        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, None)],
-        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [None, 1.0])],
         [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [float("nan"), 1.0])],
         [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [float("-inf"), 1.0])],
-        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [3.0])],
         [(0, [1.0, 2.0]), (0, [3.0, 1.0]), (2, [0.5, 0.5])],
         [(None, [1.0, 2.0]), (1, [3.0, 1.0]), (2, [0.5, 0.5])],
     ],
-    ids=["null_vector", "null_element", "nan", "inf", "ragged",
-         "tied_seed_ids", "null_id"],
+    ids=["nan", "inf", "tied_seed_ids", "null_id"],
 )
 def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
     spark, monkeypatch, rows
@@ -375,16 +389,7 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
     fits the centroids, as it does with ``MAX_ROWS = 0``; both runs
     return the same centroids in the same order (tied seed ids take
     their vectors in vector order)."""
-    calls = []
-    for fn in ("_centroids_in_one_task", "_centroids_distributed"):
-        real = getattr(sd, fn)
-
-        def spy(*a, _fn=fn, _real=real):
-            got = _real(*a)
-            calls.append((_fn, got is not None))
-            return got
-
-        monkeypatch.setattr(sd, fn, spy)
+    calls = _spy_on_both_loops(monkeypatch)
     df = spark.createDataFrame(rows, "id long, v array<double>")
 
     def fit():
@@ -393,11 +398,41 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
 
     got = fit()
     assert calls == [
-        ("_centroids_in_one_task", False), ("_centroids_distributed", True)
+        ("_centroids_in_one_task", [False]), ("_centroids_distributed", [True])
     ]
     _distributed(monkeypatch)
     assert fit() == got
-    assert calls[2:] == [("_centroids_distributed", True)]
+    assert calls[2:] == [("_centroids_distributed", [True])]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, None)],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [None, 1.0])],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [3.0])],
+        [(0, [1.0, 2.0]), (1, [0.5, 0.5]), (2, [3.0, 1.0, 2.0])],
+        # without the raise, [9.0] went to cluster 0 and dragged
+        # centroid 0 to [4.5, 0.0]
+        [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [9.0])],
+    ],
+    ids=["null_vector", "null_element", "ragged", "long", "short_far"],
+)
+def test_kmeans_vectors_without_a_distance_raise_naming_the_column(
+    spark, monkeypatch, rows
+):
+    """A vector that is NULL, holds a NULL element or differs in length
+    from the centroids has no distance to them: the distributed loop
+    (where the one task sends it) raises a ValueError naming the vector
+    column instead of putting it in cluster 0."""
+    calls = _spy_on_both_loops(monkeypatch)
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    with pytest.raises(ValueError, match="'v'"):
+        sd.kmeans_fit(df, "id", "v", k=2, iters=2)
+    assert calls == [("_centroids_in_one_task", [False])]
+    _distributed(monkeypatch)
+    with pytest.raises(ValueError, match="'v'"):
+        sd.kmeans_fit(df, "id", "v", k=2, iters=2)
 
 
 @pytest.mark.parametrize(
@@ -442,3 +477,86 @@ def test_kmeans_wide_tables_and_empty_tables_skip_the_task(
     with pytest.raises(ValueError, match="empty"):
         sd.kmeans_fit(empty, "id", "v", k=2, iters=2)
     assert calls == [1]
+
+
+# ------------------------------------------------ product quantization
+
+
+def _pq_fit_both_paths(spark, monkeypatch, rows, dim, m, iters=3):
+    """``pq_fit`` on each path: (codebooks as exact bit patterns,
+    sorted codes) per path."""
+    df = spark.createDataFrame(rows, "id bigint, v array<float>")
+
+    def run():
+        codes, books = vec.pq_fit(df, "id", "v", dim=dim, m=m, k=3, iters=iters)
+        bits = [[[float(x).hex() for x in cv] for cv in book] for book in books]
+        return bits, sorted(tuple(r) for r in codes.collect())
+
+    return _both_paths(monkeypatch, sd, "_centroids_in_one_task", run)
+
+
+def _random_rows(seed: int, n: int, dim: int) -> list[tuple]:
+    rng = np.random.RandomState(seed)
+    vecs = rng.randn(n, dim).astype(np.float32)
+    ids = rng.permutation(10 * n)[:n]
+    return [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
+
+
+@pytest.mark.parametrize("m", [1, 2, 4])
+def test_pq_fit_paths_identical_on_random_float32(spark, monkeypatch, m):
+    """All m codebooks fit in one call: the one task and the merged
+    distributed rounds give bit-identical codebooks and codes."""
+    rows = _random_rows(m, 48, 8)
+    one, dist = _pq_fit_both_paths(spark, monkeypatch, rows, 8, m)
+    assert one == dist
+    assert len(one[0]) == m and all(len(book) == 3 for book in one[0])
+    assert len(one[1]) == len(rows) and len(one[1][0]) == m + 1
+
+
+def test_pq_fit_sends_only_a_nan_subspace_to_the_distributed_loop(
+    spark, monkeypatch
+):
+    """A NaN the twin cannot reproduce lies in subspace 2 only: the one
+    task fits the other three, the distributed loop fits subspace 2
+    alone, and the codebooks equal an all-distributed run's."""
+    rows = _random_rows(7, 40, 8)
+    rows[5][1][4] = float("nan")
+    calls = _spy_on_both_loops(monkeypatch)
+    df = spark.createDataFrame(rows, "id bigint, v array<float>")
+
+    def books():
+        got = vec.pq_fit(df, "id", "v", dim=8, m=4, k=3, iters=2)[1]
+        return [[[float(x).hex() for x in cv] for cv in b] for b in got]
+
+    mixed = books()
+    assert calls == [
+        ("_centroids_in_one_task", [True, True, False, True]),
+        ("_centroids_distributed", [True]),
+    ]
+    _distributed(monkeypatch)
+    assert books() == mixed
+    assert calls[2:] == [("_centroids_distributed", [True] * 4)]
+
+
+def test_distributed_pq_fit_jobs_do_not_grow_with_m(spark, monkeypatch):
+    """The distributed loop fits every subspace in the same rounds: a
+    gate count, one seed collect and one collect per round, whatever
+    m is. With AQE on (get_spark pins it), the gate's and each round's
+    shuffle add a map-stage job: 2 * iters + 3 jobs, where m separate
+    fits would run m times that."""
+    _distributed(monkeypatch)
+    df = spark.createDataFrame(_random_rows(11, 40, 8), "id bigint, v array<float>")
+    df.count()
+    sc = spark.sparkContext
+    iters = 2
+    jobs = {}
+    for m in (1, 4):
+        group = f"pq-fit-jobs-{m}"
+        sc.setJobGroup(group, group)
+        try:
+            vec.pq_fit(df, "id", "v", dim=8, m=m, k=3, iters=iters)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[m] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] == jobs[1] <= 2 * iters + 3, jobs

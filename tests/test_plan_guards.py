@@ -482,10 +482,14 @@ def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
     loop in one Arrow task when the table fits one (engine.onetask):
     building these rows at the test SF launches a handful of jobs, not
     one chain per round (46, 46, 20 and 11 with the distributed loops).
+    The one loop also fits PQ's m codebooks in one call (q_k23_pq_codes
+    and q_k23_ivf_pq ran 12 and 15 jobs with one fit per subspace) and
+    IVF's coarse quantizer (q_k3_ivf ran 6 with its own Lloyd loop).
     Jobs are counted per job group, as perfbench/curate.py counts them.
-    The PageRank rows return a checkpoint of the ranks and k-means a
-    SQL projection against the fitted centroids, so their plans hold
-    no Python stage."""
+    The PageRank rows return a checkpoint of the ranks and k-means and
+    PQ a SQL projection against the fitted centroids, so their plans
+    hold no Python stage; BPE and the two IVF rows keep their
+    allowlisted Python stages."""
     from jane_spark.contracts import REGISTRY
 
     sc = spark.sparkContext
@@ -494,6 +498,9 @@ def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
         "q_k34_textrank": 8,
         "q_k22_bpe_train": 6,
         "q_k16_kmeans": 4,
+        "q_k23_pq_codes": 4,
+        "q_k23_ivf_pq": 7,
+        "q_k3_ivf": 4,
     }
     jobs = {}
     for name in budget:
@@ -504,17 +511,17 @@ def test_one_task_loop_builds_stay_within_job_budget(spark, sf_dir):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-        if name != "q_k22_bpe_train":
+        if name not in ("q_k22_bpe_train", "q_k23_ivf_pq", "q_k3_ivf"):
             plan = _executed_plan(df)
             assert not any(m in plan for m in _PY_MARKERS), (name, plan)
     assert all(jobs[n] <= cap for n, cap in budget.items()), jobs
 
 
 def test_pq_fit_jobs_inherit_the_callers_job_group(spark, sf_dir):
-    """pq_fit trains its subspace codebooks from a thread pool; every
-    job those threads start carries the caller's job group, so a
-    per-group count (bench.py's rebuild rule, the budget above) sees
-    them and none runs ungrouped."""
+    """Every job that building a PQ row starts (the Lloyd loop's gate
+    count and fit) carries the caller's job group, so a per-group count
+    (bench.py's rebuild rule, the budget above) sees them and none runs
+    ungrouped."""
     import bench
 
     sc = spark.sparkContext
