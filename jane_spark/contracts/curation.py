@@ -2906,8 +2906,8 @@ def q_k26_train(spark, sf_dir):
     "each iteration = one vocabulary-sized pair-count shuffle + ONE "
     "row collected (the argmax pair, IVF-centroid precedent), "
     "lineage cut per iteration; a word-type table that fits one task "
-    "(engine.onetask: Spark's per-row size estimate within the "
-    "broadcast threshold) runs all 8 merges in ONE Arrow task "
+    "(engine.onetask.in_one_task: at most onetask.MAX_ROWS rows, "
+    "counted in the task) runs all 8 merges in ONE Arrow task "
     "instead; (count desc, pair asc) ties make the "
     "merge table byte-deterministic across partitionings. Oracle-"
     "backed since r7: the greedy merge fold has a CLOSED FORM "

@@ -1783,9 +1783,10 @@ SELECT node, CAST(r AS BIGINT) AS rank_scaled FROM r{iters}"""
     "each round. Per iteration: one src-join (rank table broadcast at "
     "dimension-sized node sets) + one dst-groupBy; the edge table is "
     "checkpointed once and reused. When that edge table fits one task "
-    "(engine.onetask.one_task_rows: an exact row count of at most "
-    "onetask.MAX_ROWS) all 5 rounds run in ONE Arrow task with the "
-    "same bigint arithmetic, and the ranks are checkpointed",
+    "(engine.onetask.in_one_task: at most onetask.MAX_ROWS rows, "
+    "counted in the task) all 5 rounds run in ONE Arrow task with the "
+    "same bigint arithmetic, and the ranks come back as a local "
+    "relation",
 )
 def q_k27_pagerank(spark, sf_dir):
     from jane_spark.operators.pagerank import event_transition_edges, pagerank

@@ -72,27 +72,65 @@ slices in turn, so it holds m times that many input cells.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from collections.abc import Callable
+from typing import TYPE_CHECKING
+
+from pyspark.sql import DataFrame
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 MAX_ROWS = 250_000
 MAX_CELLS = 4_000_000
 
 
-def one_task_rows(df: DataFrame, cells: Column | None = None) -> int | None:
-    """Row count of ``df`` when it is at most ``MAX_ROWS``, else None.
-    ``df`` should already be materialized: the count is an action (it
-    stops reading after ``MAX_ROWS + 1`` rows). ``cells``, a per-row
-    element count such as an array's size, also bounds the table's
-    total elements by ``MAX_CELLS`` (same one action)."""
-    head = df.limit(MAX_ROWS + 1)
-    if cells is None:
-        rows, total = head.count(), 0
-    else:
-        rows, total = head.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum(cells), F.lit(0))
-        ).first()
-    return rows if rows <= MAX_ROWS and total <= MAX_CELLS else None
+def in_one_task(
+    df: DataFrame, fn: "Callable[[pa.Table], pa.Table]", cells: str | None = None
+) -> "pa.Table | None":
+    """``fn``'s result from one call, in one Python task, on the whole
+    of ``df`` as one Arrow table; None, and ``fn`` never runs, when
+    ``df`` holds more than ``MAX_ROWS`` rows or, when ``cells`` names
+    an array column, more than ``MAX_CELLS`` elements in it (NULL
+    arrays count 0). An empty ``df`` fits. The bounds are read here,
+    when the action is planned.
+
+    One action: ``limit(MAX_ROWS + 1)``, whose single-partition
+    exchange is its map-stage job, feeds the one task, which counts
+    as it reads, so the size check runs no job of its own, and sends
+    ``fn``'s table back as one Arrow IPC blob. A table over a bound
+    therefore still reaches Python before its distributed loop
+    starts."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    max_rows, max_cells = MAX_ROWS, MAX_CELLS
+    schema = to_arrow_schema(df.schema)
+
+    def run(batches):
+        held, rows, total, blob = [], 0, 0, None
+        # read every batch, so Spark can reuse the worker; hold none
+        # past a bound
+        for b in batches:
+            rows += b.num_rows
+            if cells is not None:
+                total += pc.sum(pc.list_value_length(b.column(cells))).as_py() or 0
+            if rows <= max_rows and total <= max_cells:
+                held.append(b)
+        if rows <= max_rows and total <= max_cells:
+            out = fn(pa.Table.from_batches(held) if held else schema.empty_table())
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, out.schema) as w:
+                w.write_table(out)
+            blob = sink.getvalue().to_pybytes()
+        yield pa.record_batch([pa.array([blob], pa.binary())], names=["ipc"])
+
+    got = df.limit(max_rows + 1).coalesce(1).mapInArrow(run, "ipc binary").collect()
+    if not got:
+        # the optimizer proved df empty and planned no task
+        return fn(schema.empty_table())
+    blob = got[0]["ipc"]
+    return None if blob is None else pa.ipc.open_stream(pa.py_buffer(blob)).read_all()
 
 
 def ansi_enabled(df: DataFrame) -> bool:

@@ -20,12 +20,12 @@ n_merges-deep plan.
 
 That loop costs two or three driver-scheduled jobs per merge however
 small the vocabulary is. When the checkpointed word-type table fits
-one task (``engine.onetask.one_task_rows``: at most ``MAX_ROWS``
-rows, a bound set from measured timings of both paths), one
-``coalesce(1).mapInArrow`` task runs every merge instead: the symbols
-still come from the JVM (``_initial_symbols``), the task only counts
-pairs, takes the same argmax and merges. Larger tables keep the
-distributed loop; both paths return the same list.
+one task (``engine.onetask.in_one_task``: at most ``MAX_ROWS`` rows,
+a bound set from measured timings of both paths), one Python task
+runs every merge instead: the symbols still come from the JVM
+(``_initial_symbols``), the task only counts pairs, takes the same
+argmax and merges. Larger tables keep the distributed loop; both
+paths return the same list.
 
 Greedy left-to-right merge semantics match the reference algorithm
 (non-overlapping scan: 'aaa' + (a,a) → ['aa','a']), pinned against a
@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jane_spark.engine.ckpt import Generations
+from jane_spark.engine.onetask import in_one_task
 
 END_OF_WORD = "</w>"
 # train_bpe's distributed loop cuts lineage every CHECKPOINT_EVERY merges:
@@ -132,21 +133,19 @@ def train_bpe(
     partitionings. Only n_merges single-row collects reach the driver.
 
     A vocabulary table that fits one task
-    (``engine.onetask.one_task_rows``) skips the loop: one
-    ``coalesce(1).mapInArrow`` task runs every merge
-    (:func:`_merge_loop`) over the symbols built above and returns the
-    same list."""
-    from jane_spark.engine.onetask import one_task_rows
-
+    (``engine.onetask.in_one_task``) skips the loop: one Python task
+    runs every merge (:func:`_merge_loop`) over the symbols built above
+    and returns the same list."""
     vocab = word_counts(docs, text_col).select(
         _initial_symbols(F.col("word")).alias("syms"), "n"
     )
     # the result is a plain driver list: every checkpoint dies at exit
     with Generations(docs.sparkSession) as g:
         vocab = g.cut(vocab)
-        if one_task_rows(vocab) is not None:
-            return _merges_in_one_task(vocab, n_merges)
-        merges: list[tuple[str, str, int]] = []
+        merges = _merges_in_one_task(vocab, n_merges)
+        if merges is not None:
+            return merges
+        merges = []
         for i in range(n_merges):
             best = (
                 vocab.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "n")
@@ -168,34 +167,24 @@ def train_bpe(
 
 def _merges_in_one_task(
     vocab: DataFrame, n_merges: int
-) -> list[tuple[str, str, int]]:
+) -> list[tuple[str, str, int]] | None:
     """:func:`_merge_loop` over the whole ``(syms, n)`` table in one
-    Python task."""
+    Python task; None when the table does not fit one task."""
     import pyarrow as pa
 
-    def run(batches):
-        words: list = []
-        for b in batches:
-            syms, n = b.column("syms").to_pylist(), b.column("n").to_pylist()
-            words += zip(syms, n)
-        merges = _merge_loop(words, n_merges)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([m[i] for m in merges]) for i in range(3)],
-            schema=pa.schema(
-                [
-                    ("left", pa.string()),
-                    ("right", pa.string()),
-                    ("cnt", pa.int64()),
-                ]
-            ),
+    def train(t: pa.Table) -> pa.Table:
+        words = zip(t.column("syms").to_pylist(), t.column("n").to_pylist())
+        merges = _merge_loop(list(words), n_merges)
+        return pa.table(
+            [
+                pa.array([m[i] for m in merges], typ)
+                for i, typ in enumerate((pa.string(), pa.string(), pa.int64()))
+            ],
+            names=["left", "right", "cnt"],
         )
 
-    rows = (
-        vocab.coalesce(1)
-        .mapInArrow(run, "left string, right string, cnt long")
-        .collect()
-    )
-    return [(r["left"], r["right"], int(r["cnt"])) for r in rows]
+    got = in_one_task(vocab, train)
+    return None if got is None else list(zip(*got.to_pydict().values()))
 
 
 def _merge_loop(

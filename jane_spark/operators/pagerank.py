@@ -31,18 +31,18 @@ the oracle unrollable.
 Two paths, one result. The distributed loop above costs ~8 driver-
 scheduled jobs per round whatever the graph size — 46 jobs and most of
 the build time on a graph of a few hundred edges. So when the
-aggregated edge table fits one task (``engine.onetask.one_task_rows``:
+aggregated edge table fits one task (``engine.onetask.in_one_task``:
 at most ``MAX_ROWS`` rows, a bound set from measured timings of both
-paths), ``coalesce(1).mapInArrow`` runs all ``iters`` rounds of the
-same integer updates inside one Python task: Spark's bigint semantics
-(``div`` truncates toward zero; overflow and division by zero raise
-under ANSI, wrap or give NULL without it; ``sum`` skips NULLs; a NULL
-node id is ranked but joins nothing) reproduce the distributed ranks
-exactly. Larger tables and node ids whose Python equality is not
-Spark's (floats, collated strings, nested types) keep the distributed
-loop.
-Either way the result is a checkpoint of the ranks, so the returned
-plan holds no Python stage.
+paths), one Python task runs all ``iters`` rounds of the same integer
+updates: Spark's bigint semantics (``div`` truncates toward zero;
+overflow and division by zero raise under ANSI, wrap or give NULL
+without it; ``sum`` skips NULLs; a NULL node id is ranked but joins
+nothing) reproduce the distributed ranks exactly. Larger tables and
+node ids whose Python equality is not Spark's (floats, collated
+strings, nested types) keep the distributed loop.
+The one task's ranks come back as a local relation and the
+distributed loop's as a checkpoint of the ranks, so the returned plan
+holds no Python stage either way.
 """
 
 from __future__ import annotations
@@ -51,19 +51,14 @@ import itertools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegralType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegralType, StringType
 
 from jane_spark.engine.ckpt import Generations
-from jane_spark.engine.onetask import ansi_enabled, one_task_rows
+from jane_spark.engine.onetask import ansi_enabled, in_one_task
 
 SCALE = 10**9
 _LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
+_EMPTY = "edge table is empty: no nodes to rank"
 
 
 def pagerank(
@@ -103,22 +98,16 @@ def pagerank(
         )
         node_t = endpoints.schema["node"].dataType
         # only ids whose Python equality is Spark's grouping equality
-        rows = (
-            one_task_rows(e)
-            if isinstance(node_t, IntegralType) or node_t == StringType()
-            else None
-        )
-        if rows == 0:
-            raise ValueError("edge table is empty: no nodes to rank")
-        if rows is not None:
-            ranks = g.cut(_ranks_in_one_task(e, node_t, num, den, iters))
-            return g.keep(ranks.select("node", F.col("r").alias("rank_scaled")))
+        if isinstance(node_t, IntegralType) or node_t == StringType():
+            ranks = _ranks_in_one_task(e, node_t, num, den, iters)
+            if ranks is not None:
+                return ranks
         # lazy hold filled by the node count; every later consumer
         # (ranks init, dangling, per-round joins) reads its blocks
         nodes = g.hold(endpoints.distinct(), eager=False)
         n = nodes.count()
         if n == 0:
-            raise ValueError("edge table is empty: no nodes to rank")
+            raise ValueError(_EMPTY)
         # outw is consumed exactly twice below (ew build, dangling set)
         # and derives from the CHECKPOINTED e — recomputing that one
         # groupBy inside each consumer is cheaper than an extra eager
@@ -186,46 +175,39 @@ def pagerank(
 
 def _ranks_in_one_task(
     e: DataFrame, node_t, num: int, den: int, iters: int
-) -> DataFrame:
-    """``(node, r)`` from every round of :func:`_integer_ranks` run by
-    one Python task over the whole aggregated edge table ``e``."""
+) -> DataFrame | None:
+    """``(node, rank_scaled)`` from every round of :func:`_integer_ranks`
+    run by one Python task over the whole aggregated edge table ``e``,
+    as a local relation; None when ``e`` does not fit one task."""
     import pyarrow as pa
 
     ansi = ansi_enabled(e)
 
-    def run(batches):
-        cols: dict[str, list] = {"src": [], "dst": [], "w": []}
-        node_type = None
-        for b in batches:
-            node_type = b.schema.field("src").type
-            for c, vals in cols.items():
-                vals += b.column(c).to_pylist()
-        if node_type is None:
-            return
-        ranks = _integer_ranks(
-            cols["src"], cols["dst"], cols["w"], num, den, iters, ansi
-        )
-        yield pa.RecordBatch.from_arrays(
+    def rank(t: pa.Table) -> pa.Table:
+        src, dst, w = (t.column(c).to_pylist() for c in ("src", "dst", "w"))
+        ranks = _integer_ranks(src, dst, w, num, den, iters, ansi) if src else {}
+        return pa.table(
             [
-                pa.array(list(ranks), node_type),
+                pa.array(list(ranks), t.schema.field("src").type),
                 pa.array(list(ranks.values()), pa.int64()),
             ],
-            names=["node", "r"],
+            names=["node", "rank_scaled"],
         )
 
-    return (
+    got = in_one_task(
         e.select(
             F.col("src").cast(node_t).alias("src"),
             F.col("dst").cast(node_t).alias("dst"),
             "w",
-        )
-        .coalesce(1)
-        .mapInArrow(
-            run,
-            StructType(
-                [StructField("node", node_t), StructField("r", LongType())]
-            ),
-        )
+        ),
+        rank,
+    )
+    if got is None:
+        return None
+    if not got.num_rows:
+        raise ValueError(_EMPTY)
+    return e.sparkSession.createDataFrame(
+        got, f"node {node_t.simpleString()}, rank_scaled bigint"
     )
 
 

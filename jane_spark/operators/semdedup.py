@@ -29,18 +29,18 @@ centroids to each of ``m`` equal-width slices of the vector at once:
 quantization (``vector.pq_fit``) fits its m codebooks in the same
 call. Run as Spark jobs the loop is one seed collect plus one collect
 per round whatever the corpus size. So when the vectors fit one task
-(``engine.onetask.one_task_rows``: at most ``MAX_ROWS`` rows and
+(``engine.onetask.in_one_task``: at most ``MAX_ROWS`` rows and
 ``MAX_CELLS`` elements of one slice, bounds set from measured timings
-of both paths), ``coalesce(1).mapInArrow`` runs the seeding and every
-round of every slice in one Python task (:func:`_lloyd`) with the SQL
-loop's arithmetic: the left-folded squared-L2, the smaller-id
-tie-break, and Spark's HALF_UP ``round(avg, 9)``. Only the k×d
-centroids come back; the assignment either path returns is the same
-lazy SQL projection against them. Larger tables, ids whose Python
-order is not Spark's, and slices the twin cannot reproduce exactly
-(NULL vectors or elements, NaN, infinities, ragged lengths, tied seed
-ids) go to the distributed loop, which fits every such slice in the
-same rounds and is also the reference for the parity tests. A vector
+of both paths), one Python task runs the seeding and every round of
+every slice (:func:`_lloyd`) with the SQL loop's arithmetic: the
+left-folded squared-L2, the smaller-id tie-break, and Spark's HALF_UP
+``round(avg, 9)``. Only the k×d centroids come back; the assignment
+either path returns is the same lazy SQL projection against them.
+Larger tables, ids whose Python order is not Spark's, and slices the
+twin cannot reproduce exactly (NULL vectors or elements, NaN,
+infinities, ragged lengths, tied seed ids) go to the distributed
+loop, which fits every such slice in the same rounds and is also the
+reference for the parity tests. A vector
 that is NULL, holds a NULL element or differs in length from the
 centroids has no distance to them: fitting raises ``ValueError``
 rather than put it in some cluster.
@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType
 
-from jane_spark.engine.onetask import one_task_rows
+from jane_spark.engine.onetask import in_one_task
 from jane_spark.functions.arrays import cosine_from_norms, norm
 
 
@@ -145,22 +145,14 @@ def _kmeans_loop(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
     )
     id_t = vecs.schema["__id"].dataType
-    # seeding orders by id: only ids whose Python order is Spark's.
-    # The gate counts one slice's cells, the size of one fit; it reads
-    # the unmaterialized input once more, where the distributed loop
-    # reads it iters + 1 times.
-    rows = (
-        one_task_rows(vecs, F.greatest(F.size(F.expr(slices[0])), F.lit(0)))
-        if isinstance(id_t, IntegralType) or id_t == StringType()
-        else None
-    )
+    # seeding orders by id: only ids whose Python order is Spark's
     books = (
         _centroids_in_one_task(vecs, slices, k, iters)
-        if rows
-        else [None] * len(slices)
-    )
+        if isinstance(id_t, IntegralType) or id_t == StringType()
+        else None
+    ) or [None] * len(slices)
     pending = [s for s, book in enumerate(books) if book is None]
-    if pending and rows != 0:  # rows == 0: nothing to seed
+    if pending:
         fitted = _centroids_distributed(
             vecs, [slices[s] for s in pending], k, iters, vec_col
         )
@@ -241,51 +233,45 @@ def _centroids_distributed(
 
 def _centroids_in_one_task(
     vecs: DataFrame, slices: "tuple[str, ...]", k: int, iters: int
-) -> "list[list[list[float]] | None]":
+) -> "list[list[list[float]] | None] | None":
     """:func:`_lloyd` on each slice of the ``(__id, __v)`` table in one
-    Arrow task; per slice its centroids, or None when the slice holds
-    an input the twin cannot reproduce."""
+    Arrow task; per slice its centroids (none for an empty table), or
+    None when the slice holds an input the twin cannot reproduce. None
+    instead of the list when the table does not fit one task: the
+    task counts one slice's cells, the size of one fit."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def run(batches):
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        ids = pa.chunked_array([b.column("__id") for b in batches]).to_pylist()
-        for s in range(len(slices)):
-            v = pa.chunked_array([b.column(f"__s{s}") for b in batches])
-            v = v.combine_chunks()
+    def fit(t: pa.Table) -> pa.Table:
+        ids = t.column("__id").to_pylist()
+        got, cvs = [], []
+        for s in range(len(slices) if ids else 0):
+            v = t.column(f"__s{s}").combine_chunks()
             lens = pc.list_value_length(v).to_numpy(zero_copy_only=False)
             flat = v.flatten()
-            if v.null_count or flat.null_count or (lens != lens[0]).any():
-                continue  # null vectors, null elements or ragged lengths
-            cents = _lloyd(
-                ids,
-                flat.to_numpy(zero_copy_only=False).reshape(len(v), lens[0]),
-                k,
-                iters,
-            )
-            if cents is not None:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([s] * len(cents), pa.int32()),
-                        pa.array(cents, pa.list_(pa.float64())),
-                    ],
-                    names=["slice", "cv"],
-                )
+            cents = [None]  # a slice without a fit is one NULL row
+            # null vectors, null elements or ragged lengths: no fit
+            if not (v.null_count or flat.null_count or (lens != lens[0]).any()):
+                x = flat.to_numpy(zero_copy_only=False).reshape(len(v), lens[0])
+                cents = _lloyd(ids, x, k, iters) or cents
+            got += [s] * len(cents)
+            cvs += cents
+        return pa.table(
+            [pa.array(got, pa.int32()), pa.array(cvs, pa.list_(pa.float64()))],
+            names=["slice", "cv"],
+        )
 
     cols = [F.expr(sl).alias(f"__s{s}") for s, sl in enumerate(slices)]
-    got = (
-        vecs.select("__id", *cols)
-        .coalesce(1)
-        .mapInArrow(run, "slice int, cv array<double>")
-        .collect()
-    )
-    books: "list[list[list[float]]]" = [[] for _ in slices]
-    for r in got:
-        books[r["slice"]].append(list(r["cv"]))
-    return [book or None for book in books]
+    got = in_one_task(vecs.select("__id", *cols), fit, cells="__s0")
+    if got is None:
+        return None
+    books: "list[list[list[float]] | None]" = [[] for _ in slices]
+    for s, cv in zip(*got.to_pydict().values()):
+        if cv is None:
+            books[s] = None
+        else:
+            books[s].append(cv)
+    return books
 
 
 _ROUND_CTX = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)

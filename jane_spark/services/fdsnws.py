@@ -964,9 +964,10 @@ def event_geojson(events: DataFrame) -> DataFrame:
 
 
 def geojson_document(events: DataFrame) -> str:
-    """Full FeatureCollection string, streamed feature-by-feature via
-    ``toLocalIterator`` — same bounded-driver-memory contract as the
-    XML document builders."""
+    """Full FeatureCollection string. Rows arrive one partition at a
+    time via ``toLocalIterator``, but every feature is held until the
+    one string is joined, so driver memory grows with the result: there
+    is no streamed form like ``quakeml_fragments``."""
     parts = []
     for row in event_geojson(events).toLocalIterator():
         parts.append(row["feature"])

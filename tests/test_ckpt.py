@@ -159,6 +159,20 @@ def test_callers_cache_survives(spark, monkeypatch, run, distributed):
     cached.unpersist()
 
 
+@pytest.mark.parametrize("name", ["q_k27_pagerank", "q_k34_textrank"])
+def test_one_task_pagerank_contracts_leave_no_checkpoint(spark, sf_dir, name):
+    """On the one-task path PageRank's ranks come back as a local
+    relation: building and collecting the contract leaves the registry
+    as it was, where a checkpoint of the ranks stayed registered for as
+    long as the session lived."""
+    from jane_spark.contracts import REGISTRY
+
+    base = persistent_rdd_ids(spark)
+    assert REGISTRY[name].spark_fn(spark, sf_dir).collect()
+    # earlier tests' leftovers may be freed meanwhile, never added to
+    assert persistent_rdd_ids(spark) <= base
+
+
 def test_only_ckpt_names_the_registry():
     """Checkpoint ids are tracked in one place: no other module under
     jane_spark/ reads or frees the persistent-RDD registry itself."""

@@ -1,15 +1,16 @@
 """PageRank, BPE training and the k-means Lloyd loop (which also fits
 product quantization's m codebooks) each have two paths: a table that
-fits one task (engine.onetask) runs the whole loop in one Arrow task,
-a larger one keeps the distributed loop. Each test forces both paths
-through ``onetask.MAX_ROWS`` (its value vs 0), checks which one ran,
-and requires identical results."""
+fits one task (engine.onetask.in_one_task) runs the whole loop in one
+Arrow task, a larger one keeps the distributed loop. Each test forces
+both paths through ``onetask.MAX_ROWS`` (its value vs 0), checks which
+one produced the result, and requires identical results."""
 
 from __future__ import annotations
 
 import random
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from jane_spark.engine import onetask
@@ -26,23 +27,44 @@ def _distributed(monkeypatch):
     monkeypatch.setattr(onetask, "MAX_ROWS", 0)
 
 
-def _both_paths(monkeypatch, module, one_task_fn: str, run):
-    """``run()`` on the one-task path, then on the distributed path;
-    a spy on ``module.one_task_fn`` proves which path each call took."""
+def _spy_one_task(monkeypatch, module, one_task_fn: str) -> list:
+    """Records each call of ``module.one_task_fn``: True when the one
+    task produced the result, False when the table did not fit it (the
+    function returned None), "raised" when it raised."""
     calls = []
     real = getattr(module, one_task_fn)
 
     def spy(*args, **kwargs):
-        calls.append(one_task_fn)
-        return real(*args, **kwargs)
+        try:
+            got = real(*args, **kwargs)
+        except Exception:
+            calls.append("raised")
+            raise
+        calls.append(got is not None)
+        return got
 
     monkeypatch.setattr(module, one_task_fn, spy)
+    return calls
+
+
+def _both_paths(monkeypatch, module, one_task_fn: str, run):
+    """``run()`` on the one-task path, then on the distributed path;
+    a spy on ``module.one_task_fn`` proves which path each result came
+    from."""
+    calls = _spy_one_task(monkeypatch, module, one_task_fn)
     one = run()
-    assert calls == [one_task_fn], "small table: one-task path expected"
+    assert calls == [True], "small table: one-task path expected"
     _distributed(monkeypatch)
     dist = run()
-    assert calls == [one_task_fn], "MAX_ROWS 0: distributed path expected"
+    assert calls == [True, False], "MAX_ROWS 0: distributed path expected"
     return one, dist
+
+
+def _assert_nothing_added(spark, base: set) -> None:
+    """No checkpoint beyond ``base`` is registered. Spark's context
+    cleaner may free an earlier test's leftover meanwhile, so the
+    registry may shrink."""
+    assert persistent_rdd_ids(spark) <= base
 
 
 def _ranks(spark, monkeypatch, rows, schema, **kw):
@@ -131,21 +153,17 @@ def test_pagerank_paths_identical_on_negative_and_null_weights(
 def test_pagerank_paths_raise_alike(spark, monkeypatch, rows, error):
     """Both paths raise the same error and leave no checkpoint behind."""
     edges = spark.createDataFrame(rows, "src string, dst string, w bigint")
-    calls = []
-    real = pr._ranks_in_one_task
-    monkeypatch.setattr(
-        pr, "_ranks_in_one_task", lambda *a: calls.append(1) or real(*a)
-    )
+    calls = _spy_one_task(monkeypatch, pr, "_ranks_in_one_task")
     base = persistent_rdd_ids(spark)
     with pytest.raises(Exception, match=error):
         pr.pagerank(edges, weight="w")
-    assert calls == [1]
-    assert persistent_rdd_ids(spark) == base
+    assert calls == ["raised"]
+    _assert_nothing_added(spark, base)
     _distributed(monkeypatch)
     with pytest.raises(Exception, match=error):
         pr.pagerank(edges, weight="w")
-    assert calls == [1]
-    assert persistent_rdd_ids(spark) == base
+    assert calls == ["raised", False]
+    _assert_nothing_added(spark, base)
 
 
 def test_pagerank_paths_identical_without_ansi(spark, monkeypatch):
@@ -180,34 +198,69 @@ def test_pagerank_float_ids_keep_distributed_loop(spark, monkeypatch):
     assert calls == [] and {r.node for r in got} == {0.0, 1.5, 2.5}
 
 
-def test_pagerank_empty_edges_raise_before_python(spark, monkeypatch):
-    calls = []
-    monkeypatch.setattr(pr, "_ranks_in_one_task", lambda *a: calls.append(1))
-    edges = spark.createDataFrame([], "src string, dst string, w bigint")
-    with pytest.raises(ValueError, match="empty"):
-        pr.pagerank(edges, weight="w")
-    _distributed(monkeypatch)
-    with pytest.raises(ValueError, match="empty"):
-        pr.pagerank(edges, weight="w")
-    assert calls == []
-
-
-def test_gate_counts_up_to_the_bound_and_ignores_join_settings(
+def test_pagerank_empty_edges_raise_alike_and_leave_no_checkpoint(
     spark, monkeypatch
 ):
-    """The bound is a row count, not a broadcast-join setting: turning
-    broadcast joins off leaves a small table on the one-task path."""
+    """An empty edge table fits one task at any ``MAX_ROWS``, and the
+    task finds no node; double node ids take the distributed loop,
+    whose node count is 0. Each raises the same ValueError and frees
+    the edge table's checkpoint."""
+    calls = _spy_one_task(monkeypatch, pr, "_ranks_in_one_task")
+    base = persistent_rdd_ids(spark)
+
+    def raises(ids):
+        edges = spark.createDataFrame([], f"src {ids}, dst {ids}, w bigint")
+        with pytest.raises(ValueError, match="edge table is empty"):
+            pr.pagerank(edges, weight="w")
+        _assert_nothing_added(spark, base)
+
+    raises("string")
+    raises("double")
+    _distributed(monkeypatch)
+    raises("string")
+    assert calls == ["raised", "raised"]
+
+
+def test_runner_fits_up_to_each_bound_and_ignores_join_settings(
+    spark, monkeypatch
+):
+    """``in_one_task`` runs ``fn`` on a table of exactly ``MAX_ROWS``
+    rows, or ``MAX_CELLS`` elements of the ``cells`` array column (a
+    NULL array counts 0); one more row or element returns None and
+    ``fn`` never runs. The bound is a row count, not a broadcast-join
+    setting, and an empty table fits."""
+
+    def rows(t):
+        return pa.table({"rows": pa.array([t.num_rows], pa.int64())})
+
+    def never(t):
+        raise AssertionError("fn ran on a table over the bound")
+
+    def fitted(df, fn, cells=None):
+        got = onetask.in_one_task(df, fn, cells)
+        return None if got is None else got.column("rows")[0].as_py()
+
     df = spark.range(7)
     monkeypatch.setattr(onetask, "MAX_ROWS", 7)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert onetask.one_task_rows(df) == 7
+        assert fitted(df, rows) == 7
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert onetask.one_task_rows(spark.range(0)) == 0
+    assert fitted(spark.range(0), rows) == 0
     monkeypatch.setattr(onetask, "MAX_ROWS", 6)
-    assert onetask.one_task_rows(df) is None
+    assert fitted(df, never) is None
+
+    vecs = spark.createDataFrame(
+        [(i, [0.5] * 4) for i in range(5)] + [(5, None)],
+        "id long, v array<double>",
+    )
+    monkeypatch.setattr(onetask, "MAX_CELLS", 20)
+    assert fitted(vecs, rows, "v") == 6
+    monkeypatch.setattr(onetask, "MAX_CELLS", 19)
+    assert fitted(vecs, never, "v") is None
+    assert fitted(vecs, rows) == 6  # no cells column, no cell bound
 
 
 # ------------------------------------------------------------------ BPE
@@ -358,14 +411,16 @@ def test_kmeans_string_ids_seed_in_code_point_order(spark, monkeypatch):
 
 def _spy_on_both_loops(monkeypatch) -> list:
     """Records ``(loop, per-slice fitted?)`` for every call of the
-    one-task and the distributed Lloyd loop."""
+    one-task and the distributed Lloyd loop that returns; ``(loop,
+    None)`` when the vectors did not fit one task."""
     calls = []
     for fn in ("_centroids_in_one_task", "_centroids_distributed"):
         real = getattr(sd, fn)
 
         def spy(*a, _fn=fn, _real=real):
             got = _real(*a)
-            calls.append((_fn, [book is not None for book in got]))
+            fitted = None if got is None else [book is not None for book in got]
+            calls.append((_fn, fitted))
             return got
 
         monkeypatch.setattr(sd, fn, spy)
@@ -402,7 +457,9 @@ def test_kmeans_inputs_the_twin_cannot_reproduce_run_distributed(
     ]
     _distributed(monkeypatch)
     assert fit() == got
-    assert calls[2:] == [("_centroids_distributed", [True])]
+    assert calls[2:] == [
+        ("_centroids_in_one_task", None), ("_centroids_distributed", [True])
+    ]
 
 
 @pytest.mark.parametrize(
@@ -433,6 +490,7 @@ def test_kmeans_vectors_without_a_distance_raise_naming_the_column(
     _distributed(monkeypatch)
     with pytest.raises(ValueError, match="'v'"):
         sd.kmeans_fit(df, "id", "v", k=2, iters=2)
+    assert calls[1:] == [("_centroids_in_one_task", None)]
 
 
 @pytest.mark.parametrize(
@@ -455,28 +513,28 @@ def test_kmeans_wide_tables_and_empty_tables_skip_the_task(
     spark, monkeypatch
 ):
     """More than ``MAX_CELLS`` vector elements keeps the distributed
-    loop at any row count; an empty table raises on either path."""
-    calls = []
-    real = sd._centroids_in_one_task
-    monkeypatch.setattr(
-        sd, "_centroids_in_one_task", lambda *a: calls.append(1) or real(*a)
-    )
+    loop at any row count (the task does not fit them); an empty table
+    fits one task on either path and raises without running the
+    distributed loop's seed job."""
+    calls = _spy_on_both_loops(monkeypatch)
     df = spark.createDataFrame(
         [(i, [float(i)] * 4) for i in range(5)], "id long, v array<double>"
     )
     monkeypatch.setattr(onetask, "MAX_CELLS", 19)
     wide = sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1]
-    assert calls == []
+    assert calls == [
+        ("_centroids_in_one_task", None), ("_centroids_distributed", [True])
+    ]
     monkeypatch.setattr(onetask, "MAX_CELLS", 20)
     assert sd.kmeans_fit(df, "id", "v", k=2, iters=2)[1] == wide
-    assert calls == [1]
+    assert calls[2:] == [("_centroids_in_one_task", [True])]
     empty = spark.createDataFrame([], "id long, v array<double>")
     with pytest.raises(ValueError, match="empty"):
         sd.kmeans_fit(empty, "id", "v", k=2, iters=2)
     _distributed(monkeypatch)
     with pytest.raises(ValueError, match="empty"):
         sd.kmeans_fit(empty, "id", "v", k=2, iters=2)
-    assert calls == [1]
+    assert calls[3:] == [("_centroids_in_one_task", [True])] * 2
 
 
 # ------------------------------------------------ product quantization
@@ -535,28 +593,54 @@ def test_pq_fit_sends_only_a_nan_subspace_to_the_distributed_loop(
     ]
     _distributed(monkeypatch)
     assert books() == mixed
-    assert calls[2:] == [("_centroids_distributed", [True] * 4)]
+    assert calls[2:] == [
+        ("_centroids_in_one_task", None), ("_centroids_distributed", [True] * 4)
+    ]
+
+
+def _jobs_in_group(spark, group: str, run) -> int:
+    """Jobs that ``run()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_task_kmeans_fit_builds_in_two_jobs(spark, monkeypatch):
+    """A one-task fit is one action: the runner's limit exchange (a
+    map-stage job under AQE, which get_spark pins) and its task; a
+    size check of its own would add jobs."""
+    calls = _spy_on_both_loops(monkeypatch)
+    df = spark.createDataFrame(_random_rows(3, 40, 8), "id bigint, v array<float>")
+    df.count()
+    jobs = _jobs_in_group(
+        spark, "kmeans-one-task-jobs",
+        lambda: sd.kmeans_fit(df, "id", "v", k=3, iters=4),
+    )
+    assert calls == [("_centroids_in_one_task", [True])]
+    assert jobs == 2, jobs
 
 
 def test_distributed_pq_fit_jobs_do_not_grow_with_m(spark, monkeypatch):
-    """The distributed loop fits every subspace in the same rounds: a
-    gate count, one seed collect and one collect per round, whatever
-    m is. With AQE on (get_spark pins it), the gate's and each round's
-    shuffle add a map-stage job: 2 * iters + 3 jobs, where m separate
-    fits would run m times that."""
+    """The distributed loop fits every subspace in the same rounds: the
+    one-task runner's action (which finds the table too large), one
+    seed collect and one collect per round, whatever m is. With AQE on
+    (get_spark pins it), the runner's and each round's shuffle add a
+    map-stage job: 2 * iters + 3 jobs, where m separate fits would run
+    m times that."""
     _distributed(monkeypatch)
     df = spark.createDataFrame(_random_rows(11, 40, 8), "id bigint, v array<float>")
     df.count()
-    sc = spark.sparkContext
     iters = 2
-    jobs = {}
-    for m in (1, 4):
-        group = f"pq-fit-jobs-{m}"
-        sc.setJobGroup(group, group)
-        try:
-            vec.pq_fit(df, "id", "v", dim=8, m=m, k=3, iters=iters)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs[m] = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = {
+        m: _jobs_in_group(
+            spark, f"pq-fit-jobs-{m}",
+            lambda m=m: vec.pq_fit(df, "id", "v", dim=8, m=m, k=3, iters=iters),
+        )
+        for m in (1, 4)
+    }
     assert jobs[4] == jobs[1] <= 2 * iters + 3, jobs
